@@ -18,14 +18,17 @@ Stages (SURVEY.md §2.3, §7 Phase 1-2):
    vocabulary is small; sort-merge on term otherwise) and compute the
    index-time BM25 exactly as ``sea/document.pyx:254-280`` as JVM column
    arithmetic (whole-stage codegen; no UDF).
-4. **block build** — ``groupBy(term, doc_group).applyInPandas``: doc-range
-   salting (``doc_group = doc_id // group_span`` for terms with
-   ``df > hot_df``) splits hot-term posting lists across tasks while
-   keeping each group doc-contiguous, so per-term global doc_id order is
-   the concatenation of its groups — no second merge stage, unlike
-   hash-salting (this replaces the reference's single-threaded k-way heap
-   merge, B2/B4). Each group emits delta-gap + varint compressed blocks of
-   ``block_size`` postings with per-block max_score metadata (B3 upgrade).
+4. **block build** — ``groupBy(term_id, doc_group).applyInPandas``:
+   doc-range salting (terms with ``df > hot_df`` split into doc ranges of
+   about ``group_span`` postings each) splits hot-term posting lists
+   across tasks while keeping each group doc-contiguous, so per-term
+   global doc_id order is the concatenation of its groups — no second
+   merge stage, unlike hash-salting (this replaces the reference's
+   single-threaded k-way heap merge, B2/B4). Each group emits delta-gap +
+   varint compressed blocks of ``block_size`` postings with per-block
+   max_score metadata (B3 upgrade). Stages 3-5 are one function,
+   ``_write_blocks``: full builds and ``add_docs`` delta segments (scored
+   with frozen base stats) write blocks through the same path.
 5. **sink** — blocks repartitioned by ``term_bucket = pmod(xxhash64(term),
    num_buckets)``, sorted by (term, first_doc) within partitions, written
    ``partitionBy(term_bucket)``: term lookups prune to one directory and
@@ -40,6 +43,7 @@ import json
 import os
 import time
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 from typing import Sequence
 
 import numpy as np
@@ -74,9 +78,10 @@ BLOCKS_SCHEMA = (
 DEFAULT_BLOCK_SIZE = 128
 DEFAULT_NUM_BUCKETS = 64
 # Doc-range salting: a hot term's posting list is split into
-# doc-contiguous groups targeting GROUP_TARGET postings each, so no
-# single task owns the Zipf head (otherwise one straggler encodes the
-# hottest term while every other core idles). Sizing by TARGET POSTINGS
+# doc-contiguous groups targeting GROUP_TARGET postings each (the
+# ``group_span`` build parameter), so no single task owns the Zipf head
+# (otherwise one straggler encodes the hottest term while every other
+# core idles). Sizing by TARGET POSTINGS
 # — ngroups = ceil(df / target), span = ceil(N_docs / ngroups) — keeps
 # the total group count ~ num_postings / target at ANY corpus size;
 # fixed doc-span salting made group count grow superlinearly with the
@@ -90,7 +95,6 @@ DEFAULT_GROUP_TARGET = 1 << 13  # target postings per hot-term salt group
 # corpus caps at 4096 tasks locally — on a real cluster raise the cap
 # with the executor count)
 ENCODE_POSTINGS_PER_TASK = 1 << 18
-DEFAULT_GROUP_SPAN = DEFAULT_GROUP_TARGET  # back-compat alias (target)
 DEFAULT_HOT_DF = 1 << 13  # salt terms with more postings than this
 # WAND write-time layout: blocks never cross a doc-shard boundary
 # (shard = first_doc // span), so every block belongs to exactly ONE
@@ -105,11 +109,6 @@ DEFAULT_WAND_SHARD_SPAN = 1 << 14
 REF_BOOSTS = (1.0, 0.5)
 REF_BS = (0.75, 0.75)
 REF_K = 1.5
-
-# per-phase walls of the most recent build (diagnostic; also copied into
-# the meta dict so lineage records where the time went)
-_PHASES: dict[str, float] = {}
-
 
 def default_field_params(num_fields: int) -> tuple[list[float], list[float]]:
     if num_fields == 2:
@@ -449,29 +448,8 @@ def bm25_score_col(
     k: float,
 ):
     """Index-time BM25 (``sea/document.pyx:254-280``) as a pure column
-    expression over ``field_freqs``/``field_lens`` arrays + an ``idf``
-    column — whole-stage-codegen'd, no UDF."""
-    tf = F.lit(0.0)
-    for f in range(num_fields):
-        ff = F.element_at("field_freqs", f + 1).cast("double")
-        fl = F.element_at("field_lens", f + 1).cast("double")
-        denom = (
-            F.lit(1.0 + bs[f])
-            + F.lit(1.0 - bs[f]) * fl / F.lit(float(avg_field_lengths[f]))
-        )
-        tf = tf + ff * F.lit(float(boosts[f])) / denom
-    return F.col("idf") * (tf * F.lit(k + 1.0)) / (tf + F.lit(k))
-
-
-def bm25_score_col_packed(
-    num_fields: int,
-    avg_field_lengths: Sequence[float],
-    boosts: Sequence[float],
-    bs: Sequence[float],
-    k: float,
-):
-    """Same index-time BM25 over the packed scalar columns ``ff_i`` /
-    ``fl_i`` (identical double expression tree -> identical scores)."""
+    expression over the packed scalar columns ``ff_i``/``fl_i`` + an
+    ``idf`` column — whole-stage-codegen'd, no UDF."""
     tf = F.lit(0.0)
     for f in range(num_fields):
         ff = F.col(f"ff_{f}").cast("double")
@@ -500,8 +478,8 @@ def _make_block_encoder_id(
     crossing carry NO per-posting Python strings (25M postings would
     materialize 25M str objects — measured ~1/3 of the encode stage).
     Term strings re-attach by joining the ~block_size-times smaller
-    BLOCKS frame with term_stats. Emitted block bytes are identical to
-    the scalar array path's (pinned by ``tests/test_index_build.py``).
+    BLOCKS frame with term_stats. Decoded blocks are pinned to
+    ``OracleIndex`` by ``tests/test_index_build.py``.
 
     Transport note: an ``applyInArrow`` variant with buffer-level
     position gathering was measured 1.8-2.2x SLOWER than this
@@ -586,213 +564,6 @@ def _make_block_encoder_id(
     return encode_groups
 
 
-def _encode_stream_arrow(block_size: int, num_fields: int, shard_span: int | None):
-    """STREAMING Arrow block encoder (``mapInArrow`` over partitions
-    pre-sorted by (term_id, doc_group, doc_id)); position payloads are
-    sliced straight out of the Arrow binary BUFFERS (offsets + data as
-    numpy) — one bytes object per BLOCK, none per posting; group state
-    carries across RecordBatch boundaries.
-
-    STATUS — kept as the NON-DEFAULT ``encode_mode="stream"``: despite
-    eliminating the per-posting Python objects, it measured ~1.8x
-    SLOWER than the groupBy/applyInPandas encoder at 25.8M postings
-    (17.7-23.3s vs 9.9-12.8s wall on local[32]; the 3-key
-    sortWithinPartitions + per-batch Arrow IPC overheads exceed the
-    pandas-conversion cost saved — second Arrow-native attempt to lose
-    to Spark's tuned pandas group path, see also the applyInArrow note
-    on the default encoder). It stays because (a) it is an independent
-    second implementation pinned byte-identical to the default by
-    ``test_stream_encoder_identical_to_group_encoder`` and (b) its
-    bounded-carry streaming shape is the right starting point if the
-    pandas path ever becomes the bottleneck on a real cluster.
-
-    Emits byte-identical blocks to the applyInPandas encoder (rows
-    reach it in the same doc_id order the kernel's stable argsort
-    produces — doc_ids are unique within a group)."""
-    import pyarrow as pa
-
-    nf = num_fields
-
-    def _np(batch, name):
-        i = batch.schema.get_field_index(name)
-        return batch.column(i).to_numpy(zero_copy_only=False)
-
-    def _bin(batch, name):
-        i = batch.schema.get_field_index(name)
-        ba = batch.column(i)
-        offsets = np.frombuffer(ba.buffers()[1], dtype=np.int32)[
-            ba.offset : ba.offset + len(ba) + 1
-        ].astype(np.int64)
-        data = np.frombuffer(ba.buffers()[2], dtype=np.uint8)
-        lens = offsets[1:] - offsets[:-1]
-        buf = data[offsets[0] : offsets[-1]] if len(ba) else np.empty(
-            0, dtype=np.uint8
-        )
-        return lens, buf
-
-    def _encode_groups(cols, out):
-        """Encode every complete group in ``cols`` (dict of aligned
-        arrays + pos buffer); the caller guarantees rows are
-        (term_id, doc_group, doc_id)-sorted and that the LAST group has
-        been held back as carry."""
-        tid, dg = cols["term_id"], cols["doc_group"]
-        n = len(tid)
-        if n == 0:
-            return
-        bnd = np.flatnonzero((tid[1:] != tid[:-1]) | (dg[1:] != dg[:-1])) + 1
-        g_starts = np.concatenate([[0], bnd])
-        g_ends = np.append(bnd, n)
-        pos_lens = cols["pos_lens"]
-        pos_starts = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(pos_lens, out=pos_starts[1:])
-        pos_buf = cols["pos_buf"]
-        doc_ids = cols["doc_id"]
-        scores = cols["score"]
-        ff_inter_all = cols["ff_inter"]
-        fl_inter_all = cols["fl_inter"]
-        pos_counts = cols["pos_count"]
-        for gs, ge in zip(g_starts, g_ends):
-            term = int(tid[gs])
-            base_block = int(dg[gs]) << 32
-            d_all = doc_ids[gs:ge]
-            m = ge - gs
-            if shard_span:
-                sh = (d_all.astype(np.uint64) // np.uint64(shard_span))
-                runs = np.concatenate(
-                    [[0], np.flatnonzero(sh[1:] != sh[:-1]) + 1]
-                )
-                starts, ends = [], []
-                for i, rs in enumerate(runs):
-                    rend = int(runs[i + 1]) if i + 1 < len(runs) else m
-                    for s0 in range(int(rs), rend, block_size):
-                        starts.append(s0)
-                        ends.append(min(s0 + block_size, rend))
-            else:
-                starts = list(range(0, m, block_size))
-                ends = [min(s0 + block_size, m) for s0 in starts]
-            for bno, (s0, e0) in enumerate(zip(starts, ends)):
-                a, b = gs + s0, gs + e0
-                d = doc_ids[a:b].astype(np.uint64)
-                s = scores[a:b].astype(np.float32)
-                out["term_id"].append(term)
-                out["block_no"].append(base_block + bno)
-                out["first_doc"].append(int(d[0]))
-                out["last_doc"].append(int(d[-1]))
-                out["count"].append(b - a)
-                out["max_score"].append(float(s.max()))
-                out["min_score"].append(float(s.min()))
-                out["doc_ids_bin"].append(varint_encode(delta_encode(d)))
-                out["scores_bin"].append(encode_scores(s))
-                out["freqs_bin"].append(
-                    varint_encode(ff_inter_all[a * nf : b * nf])
-                )
-                out["lens_bin"].append(
-                    varint_encode(fl_inter_all[a * nf : b * nf])
-                )
-                out["pos_counts_bin"].append(
-                    varint_encode(pos_counts[a:b].astype(np.uint64))
-                )
-                out["pos_bin_"].append(
-                    pos_buf[pos_starts[a] : pos_starts[b]].tobytes()
-                )
-
-    OUT_KEYS = [
-        "term_id", "block_no", "first_doc", "last_doc", "count",
-        "max_score", "min_score", "doc_ids_bin", "scores_bin",
-        "freqs_bin", "lens_bin", "pos_counts_bin", "pos_bin_",
-    ]
-
-    def _emit(out):
-        rb = pa.record_batch(
-            {
-                "term_id": pa.array(out["term_id"], type=pa.int64()),
-                "block_no": pa.array(out["block_no"], type=pa.int64()),
-                "first_doc": pa.array(out["first_doc"], type=pa.int64()),
-                "last_doc": pa.array(out["last_doc"], type=pa.int64()),
-                "count": pa.array(out["count"], type=pa.int32()),
-                "max_score": pa.array(out["max_score"], type=pa.float32()),
-                "min_score": pa.array(out["min_score"], type=pa.float32()),
-                "doc_ids_bin": pa.array(out["doc_ids_bin"], type=pa.binary()),
-                "scores_bin": pa.array(out["scores_bin"], type=pa.binary()),
-                "freqs_bin": pa.array(out["freqs_bin"], type=pa.binary()),
-                "lens_bin": pa.array(out["lens_bin"], type=pa.binary()),
-                "pos_counts_bin": pa.array(
-                    out["pos_counts_bin"], type=pa.binary()
-                ),
-                "positions_bin": pa.array(out["pos_bin_"], type=pa.binary()),
-            }
-        )
-        return rb
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        carry = None  # dict of aligned arrays for the (single) open group
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            tid = _np(batch, "term_id").astype(np.int64)
-            dg = _np(batch, "doc_group").astype(np.int64)
-            did = _np(batch, "doc_id").astype(np.int64)
-            sc = _np(batch, "score")
-            ffs = [
-                _np(batch, f"ff_{f}").astype(np.uint64) for f in range(nf)
-            ]
-            fls = [
-                _np(batch, f"fl_{f}").astype(np.uint64) for f in range(nf)
-            ]
-            pc = _np(batch, "pos_count").astype(np.int64)
-            pos_lens, pos_buf = _bin(batch, "pos_bin")
-            ff_inter = np.column_stack(ffs).ravel()
-            fl_inter = np.column_stack(fls).ravel()
-            cols = {
-                "term_id": tid, "doc_group": dg, "doc_id": did, "score": sc,
-                "ff_inter": ff_inter, "fl_inter": fl_inter, "pos_count": pc,
-                "pos_lens": pos_lens, "pos_buf": pos_buf,
-            }
-            if carry is not None:
-                cols = {
-                    k: np.concatenate([carry[k], cols[k]]) for k in cols
-                }
-            # hold back the trailing (possibly continuing) group
-            tid_c, dg_c = cols["term_id"], cols["doc_group"]
-            n = len(tid_c)
-            last_change = np.flatnonzero(
-                (tid_c[1:] != tid_c[:-1]) | (dg_c[1:] != dg_c[:-1])
-            )
-            cut = int(last_change[-1]) + 1 if len(last_change) else 0
-            pos_starts = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(cols["pos_lens"], out=pos_starts[1:])
-
-            def slice_cols(lo, hi):
-                return {
-                    "term_id": cols["term_id"][lo:hi],
-                    "doc_group": cols["doc_group"][lo:hi],
-                    "doc_id": cols["doc_id"][lo:hi],
-                    "score": cols["score"][lo:hi],
-                    "ff_inter": cols["ff_inter"][lo * nf : hi * nf],
-                    "fl_inter": cols["fl_inter"][lo * nf : hi * nf],
-                    "pos_count": cols["pos_count"][lo:hi],
-                    "pos_lens": cols["pos_lens"][lo:hi],
-                    "pos_buf": cols["pos_buf"][
-                        pos_starts[lo] : pos_starts[hi]
-                    ].copy(),
-                }
-
-            complete = slice_cols(0, cut)
-            carry = slice_cols(cut, n)
-            if cut:
-                out = {k_: [] for k_ in OUT_KEYS}
-                _encode_groups(complete, out)
-                if out["term_id"]:
-                    yield _emit(out)
-        if carry is not None and len(carry["term_id"]):
-            out = {k_: [] for k_ in OUT_KEYS}
-            _encode_groups(carry, out)
-            if out["term_id"]:
-                yield _emit(out)
-
-    return fn
-
-
 def _count_checking_ids(corpus: DataFrame, id_col: str, group_span) -> int:
     """Row count fused with a doc-id domain check (one scan, no extra
     job vs the plain ``count()`` it replaces). The block layout packs
@@ -830,14 +601,13 @@ def build_index(
     analyzer: str = "reference",
     block_size: int = DEFAULT_BLOCK_SIZE,
     num_buckets: int = DEFAULT_NUM_BUCKETS,
-    group_span: int = DEFAULT_GROUP_SPAN,
+    group_span: int = DEFAULT_GROUP_TARGET,
     hot_df: int = DEFAULT_HOT_DF,
     boosts: Sequence[float] | None = None,
     bs: Sequence[float] | None = None,
     k: float = REF_K,
     corpus_path: str | None = None,
     shard_span: int | None = DEFAULT_WAND_SHARD_SPAN,
-    encode_mode: str = "group",
 ) -> dict:
     """Build the full index at ``out_path``; returns the meta dict.
 
@@ -849,7 +619,7 @@ def build_index(
     build's memory footprint flat regardless of corpus size (the SPIMI
     discipline: bounded RAM, spill runs, merge from disk)."""
     t0 = time.time()
-    _PHASES.clear()
+    phases: dict[str, float] = {}
     # narrow single-file corpora (one parquet row group) cap the whole
     # tokenize stage at 1-2 tasks; output-invariant (the block encoder
     # sorts each (term_id, doc_group) group by doc_id)
@@ -857,45 +627,139 @@ def build_index(
     work = os.path.join(out_path, "work", "postings", "slice=0")
     # overlap the independent corpus count+id-check with the tokenize
     # stage (guide §2.6): its one scan job back-fills executors idled
-    # by the tokenize write's straggler tail; joined before finalize
-    # needs the count. Exceptions propagate after the join.
-    import threading
-
-    cnt_res: list = []
-
-    def _count_job() -> None:
-        try:
-            cnt_res.append(
-                _count_checking_ids(corpus, doc_id_col, group_span)
-            )
-        except BaseException as exc:  # re-raised on the main thread
-            cnt_res.append(exc)
-
-    cnt_thread = threading.Thread(target=_count_job, daemon=True)
-    cnt_thread.start()
-    tokenize_postings_packed(
-        corpus, fields, doc_id_col, analyzer
-    ).write.mode("overwrite").option("compression", "lz4").parquet(work)
-    # lz4 for TRANSIENT staging: measured 1.7s vs snappy's 3.1s to write
-    # 25.8M postings (read ≤3x then deleted — codec CPU, not size, is
-    # what matters here; the long-lived blocks keep the default codec)
-    # explicit schema: an empty corpus writes no data files, and schema
-    # inference over an empty directory fails
-    postings = spark.read.schema(packed_postings_schema(len(fields))).parquet(
-        work
-    )
-    _PHASES["tokenize_stage"] = time.time() - t0
-    cnt_thread.join()
-    if cnt_res and isinstance(cnt_res[0], BaseException):
-        raise cnt_res[0]
-    num_documents = int(cnt_res[0])
+    # by the tokenize write's straggler tail; its result is taken
+    # before finalize needs the count (``result()`` re-raises).
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        count = pool.submit(_count_checking_ids, corpus, doc_id_col, group_span)
+        tokenize_postings_packed(
+            corpus, fields, doc_id_col, analyzer
+        ).write.mode("overwrite").option("compression", "lz4").parquet(work)
+        # lz4 for TRANSIENT staging: measured 1.7s vs snappy's 3.1s to
+        # write 25.8M postings (read ≤3x then deleted — codec CPU, not
+        # size, is what matters here; the long-lived blocks keep the
+        # default codec). Explicit schema: an empty corpus writes no
+        # data files, and schema inference over an empty directory fails
+        postings = spark.read.schema(
+            packed_postings_schema(len(fields))
+        ).parquet(work)
+        phases["tokenize_stage"] = time.time() - t0
+        num_documents = int(count.result())
     return _finalize_index(
         spark, postings, num_documents, out_path, fields,
         doc_id_col=doc_id_col, analyzer=analyzer, block_size=block_size,
         num_buckets=num_buckets, group_span=group_span, hot_df=hot_df,
         boosts=boosts, bs=bs, k=k, corpus_path=corpus_path, t0=t0,
-        shard_span=shard_span, encode_mode=encode_mode,
+        shard_span=shard_span, phases=phases,
     )
+
+
+def _write_blocks(
+    postings: DataFrame,
+    term_map: DataFrame,
+    out_path: str,
+    *,
+    avg_field_lengths: Sequence[float],
+    boosts: Sequence[float],
+    bs: Sequence[float],
+    k: float,
+    num_documents: int,
+    block_size: int,
+    num_buckets: int,
+    group_span: int,
+    hot_df: int,
+    shard_span: int | None,
+    encode_parts: int | None,
+    sink_parts: int,
+    doc_lens_parts: int,
+) -> dict[str, float]:
+    """Stages 3-5 for one segment, the single owner of the block layout
+    (full builds and delta segments both write through here): BM25-score
+    the staged packed ``postings`` against ``term_map`` (``term, term_id,
+    df, idf``), salt hot terms by doc range, encode blocks, re-attach
+    ``term``/``term_bucket``, and write ``<out_path>/blocks`` partitioned
+    by bucket plus ``<out_path>/doc_lens``.
+
+    ``num_documents`` is the N the salting spans are cut from. Partition
+    counts are the caller's: ``encode_parts`` (None leaves the encode
+    shuffle to AQE), ``sink_parts`` for the blocks files and
+    ``doc_lens_parts``. Returns the ``score_encode_write`` and
+    ``doc_lens_write`` walls."""
+    nf = len(avg_field_lengths)
+    scored = postings.join(term_map, "term").withColumn(
+        "score", bm25_score_col(nf, avg_field_lengths, boosts, bs, k)
+    )
+    # doc-range salting for hot terms: groups stay doc-contiguous so the
+    # per-term list is the ordered concat of its groups (no re-merge).
+    # ``group_span`` is the TARGET POSTINGS PER GROUP: a term with df
+    # postings splits into ceil(df/target) doc-ranges, so total group
+    # count stays ~ num_postings/target at any corpus size (a fixed
+    # doc-span made groups multiply with the corpus and the per-group
+    # Arrow/pandas overhead dominated the encode stage).
+    ngroups = F.ceil(F.col("df") / F.lit(float(group_span)))
+    span = F.ceil(F.lit(float(max(num_documents, 1))) / ngroups)
+    stripped = scored.withColumn(
+        "doc_group",
+        F.when(
+            F.col("df") > F.lit(hot_df),
+            F.floor(F.col("doc_id") / span).cast("long"),
+        ).otherwise(F.lit(0)),
+    ).drop("term", "df", "idf")
+    if encode_parts is not None:
+        # on the group keys, so it SATISFIES the groupBy's clustering
+        # (no second exchange), and AQE never coalesces a user-numbered
+        # shuffle
+        stripped = stripped.repartition(encode_parts, "term_id", "doc_group")
+    blocks = (
+        stripped.groupBy("term_id", "doc_group")
+        .applyInPandas(
+            _make_block_encoder_id(block_size, nf, shard_span),
+            BLOCKS_ID_SCHEMA,
+        )
+        # re-attach the term string + bucket at BLOCK granularity (~1/128
+        # of the posting count; AQE broadcasts the term map for small
+        # vocabs, SMJ on term_id otherwise — both scale)
+        .join(term_map.select("term_id", "term"), "term_id")
+        .drop("term_id")
+        .withColumn(
+            "term_bucket",
+            F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"),
+        )
+    )
+
+    # per-doc field lengths (one row per doc): the LTR feature path needs
+    # lengths for docs that match NO query term (the reference re-tokenizes
+    # the doc on the fly for semantic-only hits — ``sea/engine.pyx:225-277``;
+    # here the lengths are read back from this tiny side table instead).
+    # Every posting of a doc carries identical field_lens, so F.first is
+    # exact; the aggregate is one narrow shuffle on doc_id. It reads only
+    # the STAGED postings, independent of the encode — submitted from a
+    # thread so its jobs back-fill executors during the encode/write's
+    # straggler tail (guide §2.6).
+    def write_doc_lens() -> float:
+        t = time.time()
+        postings.groupBy("doc_id").agg(
+            *[F.first(f"fl_{f}").alias(f"fl_{f}") for f in range(nf)]
+        ).repartition(doc_lens_parts).write.mode("overwrite").parquet(
+            os.path.join(out_path, "doc_lens")
+        )
+        return time.time() - t
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        doc_lens = pool.submit(write_doc_lens)
+        t = time.time()
+        (
+            blocks.repartition(sink_parts, "term_bucket")
+            .sortWithinPartitions("term", "first_doc")
+            .select(*[c.split()[0] for c in BLOCKS_SCHEMA.split(", ")], "term_bucket")
+            .write.mode("overwrite")
+            .partitionBy("term_bucket")
+            .parquet(os.path.join(out_path, "blocks"))
+        )
+        walls = {"score_encode_write": time.time() - t}
+        # own wall of the overlapped job (hidden inside the encode wall
+        # unless it outlasted it)
+        walls["doc_lens_write"] = doc_lens.result()
+    return walls
 
 
 def _finalize_index(
@@ -917,10 +781,13 @@ def _finalize_index(
     t0: float,
     extra_meta: dict | None = None,
     shard_span: int | None = DEFAULT_WAND_SHARD_SPAN,
-    encode_mode: str = "group",
+    phases: dict[str, float] | None = None,
 ) -> dict:
     """Stats + score + block-encode + sink from a postings frame
-    (shared by the one-shot and the checkpoint-resumable builds)."""
+    (shared by the one-shot, the checkpoint-resumable and the streaming
+    builds). ``phases`` holds the calling build's walls so far; this
+    call adds its own, and ``meta["phase_walls"]`` reports them."""
+    phases = {} if phases is None else phases
     nf = len(fields)
     if boosts is None or bs is None:
         d_boosts, d_bs = default_field_params(nf)
@@ -932,7 +799,7 @@ def _finalize_index(
         F.count(F.lit(1)).alias("num_postings"),
         *[F.sum(f"ff_{f}").alias(f"len_{f}") for f in range(nf)],
     ).collect()[0]
-    _PHASES["global_stats"] = time.time() - _t
+    phases["global_stats"] = time.time() - _t
     num_postings = glob["num_postings"] or 0
     avg_field_lengths = [
         (glob[f"len_{f}"] or 0) / num_documents if num_documents else 0.0
@@ -964,126 +831,31 @@ def _finalize_index(
         "overwrite"
     ).parquet(os.path.join(out_path, "term_stats"))
     term_stats = load_term_stats(spark, out_path)
-    _PHASES["term_stats_write"] = time.time() - _t
+    phases["term_stats_write"] = time.time() - _t
 
-    scored = postings.join(
-        term_stats.select("term", "term_id", "df", "idf"), "term"
-    ).withColumn(
-        "score",
-        bm25_score_col_packed(nf, avg_field_lengths, boosts, bs, k),
+    # Size the ENCODE shuffle from the MEASURED staged postings rather
+    # than the session's global shuffle.partitions: this stage's
+    # per-task cost is per-ROW (Arrow->pandas crossing + numpy encode),
+    # so byte-based sizing — a static global, or AQE's byte advisory
+    # over the compact binary shuffle data — undersizes it once the
+    # corpus outgrows the session default (measured at 46.5M postings /
+    # local[32]: 505k postings/s at 64 tasks -> 800k at 128; raising AQE
+    # initialPartitionNum instead did NOT help because the byte advisory
+    # re-coalesced).
+    n_parts = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+        min(4096, -(-int(num_postings) // ENCODE_POSTINGS_PER_TASK)),
     )
-    # doc-range salting for hot terms: groups stay doc-contiguous so the
-    # per-term list is the ordered concat of its groups (no re-merge).
-    # ``group_span`` is the TARGET POSTINGS PER GROUP: a term with df
-    # postings splits into ceil(df/target) doc-ranges, so total group
-    # count stays ~ num_postings/target at any corpus size (a fixed
-    # doc-span made groups multiply with the corpus and the per-group
-    # Arrow/pandas overhead dominated the encode stage).
-    ngroups = F.ceil(F.col("df") / F.lit(float(group_span)))
-    span = F.ceil(F.lit(float(max(num_documents, 1))) / ngroups)
-    scored = scored.withColumn(
-        "doc_group",
-        F.when(
-            F.col("df") > F.lit(hot_df),
-            F.floor(F.col("doc_id") / span).cast("long"),
-        ).otherwise(F.lit(0)),
-    )
-
-    drop_cols = ["term", "df", "idf"]
-    stripped = scored.drop(*drop_cols)
-    if encode_mode == "stream":
-        # one exchange (repartition on the group keys) + JVM sort, then a
-        # STREAMING Arrow encoder: no per-posting Python objects cross
-        # into the worker (measured: the groupBy/applyInPandas transfer
-        # cost ~12x the encode kernels at 25.8M postings)
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        blocks_id = (
-            stripped.repartition(n_parts, "term_id", "doc_group")
-            .sortWithinPartitions("term_id", "doc_group", "doc_id")
-            .mapInArrow(
-                _encode_stream_arrow(block_size, nf, shard_span),
-                BLOCKS_ID_SCHEMA,
-            )
-        )
-    else:
-        # Size the ENCODE shuffle from the MEASURED staged postings
-        # rather than the session's global shuffle.partitions: this
-        # stage's per-task cost is per-ROW (Arrow->pandas crossing +
-        # numpy encode), so byte-based sizing — a static global, or
-        # AQE's byte advisory over the compact binary shuffle data —
-        # undersizes it once the corpus outgrows the session default
-        # (measured at 46.5M postings / local[32]: 505k postings/s at
-        # 64 tasks -> 800k at 128; raising AQE initialPartitionNum
-        # instead did NOT help because the byte advisory re-coalesced).
-        # The explicit repartition is on the group keys, so it
-        # SATISFIES the groupBy's clustering (no second exchange), and
-        # AQE never coalesces a user-numbered shuffle.
-        n_parts = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-            min(4096, -(-int(num_postings) // ENCODE_POSTINGS_PER_TASK)),
-        )
-        blocks_id = (
-            stripped.repartition(n_parts, "term_id", "doc_group")
-            .groupBy("term_id", "doc_group")
-            .applyInPandas(
-                _make_block_encoder_id(block_size, nf, shard_span),
-                BLOCKS_ID_SCHEMA,
-            )
-        )
-    # re-attach the term string + bucket at BLOCK granularity (~1/128 of
-    # the posting count; AQE broadcasts term_stats for small vocabs,
-    # SMJ on term_id otherwise — both scale)
-    blocks = blocks_id.join(
-        term_stats.select("term_id", "term", "term_bucket"), "term_id"
-    ).drop("term_id")
-
-    # per-doc field lengths (one row per doc): the LTR feature path needs
-    # lengths for docs that match NO query term (the reference re-tokenizes
-    # the doc on the fly for semantic-only hits — ``sea/engine.pyx:225-277``;
-    # here the lengths are read back from this tiny side table instead).
-    # Every posting of a doc carries identical field_lens, so F.first is
-    # exact; the aggregate is one narrow shuffle on doc_id. It reads only
-    # the STAGED postings, independent of the encode — submitted from a
-    # thread so its jobs back-fill executors during the encode/write's
-    # straggler tail (guide §2.6); joined before meta is written.
-    import threading
-
-    dl_res: list = []
-
-    def _doc_lens_job() -> None:
-        try:
-            _dt = time.time()
-            postings.groupBy("doc_id").agg(
-                *[F.first(f"fl_{f}").alias(f"fl_{f}") for f in range(nf)]
-            ).repartition(max(1, num_buckets // 8)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_path, "doc_lens"))
-            dl_res.append(time.time() - _dt)
-        except BaseException as exc:  # re-raised on the main thread
-            dl_res.append(exc)
-
-    dl_thread = threading.Thread(target=_doc_lens_job, daemon=True)
-    _t = time.time()
-    dl_thread.start()
-    try:
-        (
-            blocks.repartition(num_buckets, "term_bucket")
-            .sortWithinPartitions("term", "first_doc")
-            .select(*[c.split()[0] for c in BLOCKS_SCHEMA.split(", ")], "term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(os.path.join(out_path, "blocks"))
-        )
-        _PHASES["score_encode_write"] = time.time() - _t
-    finally:
-        dl_thread.join()
-    if dl_res and isinstance(dl_res[0], BaseException):
-        raise dl_res[0]
-    # own wall of the overlapped job (hidden inside the encode wall
-    # unless it outlasted it)
-    _PHASES["doc_lens_write"] = float(dl_res[0]) if dl_res else 0.0
+    phases.update(_write_blocks(
+        postings,
+        term_stats.select("term", "term_id", "df", "idf"),
+        out_path,
+        avg_field_lengths=avg_field_lengths, boosts=boosts, bs=bs, k=k,
+        num_documents=num_documents, block_size=block_size,
+        num_buckets=num_buckets, group_span=group_span, hot_df=hot_df,
+        shard_span=shard_span, encode_parts=n_parts,
+        sink_parts=num_buckets, doc_lens_parts=max(1, num_buckets // 8),
+    ))
 
     wall = time.time() - t0
     meta = {
@@ -1101,12 +873,11 @@ def _finalize_index(
         "group_span": group_span,
         "hot_df": hot_df,
         "wand_shard_span": shard_span,
-        "encode_mode": encode_mode,
         "doc_id_col": doc_id_col,
         "corpus_path": corpus_path,
         "build_wall_sec": wall,
         "postings_per_sec": (num_postings / wall) if wall > 0 else None,
-        "phase_walls": {k_: round(v, 3) for k_, v in _PHASES.items()},
+        "phase_walls": {k_: round(v, 3) for k_, v in phases.items()},
         **(extra_meta or {}),
     }
     with open(os.path.join(out_path, "meta.json"), "w") as fh:
@@ -1159,7 +930,7 @@ def build_index_resumable(
     analyzer: str = "reference",
     block_size: int = DEFAULT_BLOCK_SIZE,
     num_buckets: int = DEFAULT_NUM_BUCKETS,
-    group_span: int = DEFAULT_GROUP_SPAN,
+    group_span: int = DEFAULT_GROUP_TARGET,
     hot_df: int = DEFAULT_HOT_DF,
     boosts: Sequence[float] | None = None,
     bs: Sequence[float] | None = None,
@@ -1189,7 +960,6 @@ def build_index_resumable(
     returns None (used by tests to simulate a crash; a production
     driver-retry loop just calls this function again).
     """
-    _PHASES.clear()
     work = os.path.join(out_path, "work")
     ckpt_dir = os.path.join(work, "checkpoints")
     os.makedirs(ckpt_dir, exist_ok=True)
@@ -1513,9 +1283,8 @@ def compact_index(
         num_buckets=meta.get("num_buckets", DEFAULT_NUM_BUCKETS),
         doc_id_col=meta.get("doc_id_col", "doc_id"),
         corpus_path=meta.get("corpus_path"),
-        group_span=meta.get("group_span", DEFAULT_GROUP_SPAN),
+        group_span=meta.get("group_span", DEFAULT_GROUP_TARGET),
         hot_df=meta.get("hot_df", DEFAULT_HOT_DF),
-        encode_mode=meta.get("encode_mode", "group"),
     )
     # shard_span=None is a deliberate layout choice (WAND disabled) —
     # only fall back to the default when the key predates the feature
@@ -1757,56 +1526,23 @@ def add_docs(
         "term string, df_local long, idf double, term_id long"
     ).parquet(os.path.join(out, "term_stats"))
 
-    boosts = meta["field_boosts"]
-    bs = meta["bm25_bs"]
-    scored = postings.join(tmap, "term").withColumn(
-        "score",
-        bm25_score_col_packed(
-            nf, meta["avg_field_lengths"], boosts, bs, meta["bm25_k"]
-        ),
-    )
-    group_span = meta.get("group_span", DEFAULT_GROUP_SPAN)
-    hot_df = meta.get("hot_df", DEFAULT_HOT_DF)
-    ngroups = F.ceil(F.col("df_local") / F.lit(float(group_span)))
-    span = F.ceil(F.lit(float(max(n_base, 1))) / ngroups)
-    scored = scored.withColumn(
-        "doc_group",
-        F.when(
-            F.col("df_local") > F.lit(hot_df),
-            F.floor(F.col("doc_id") / span).cast("long"),
-        ).otherwise(F.lit(0)),
-    )
-    blocks_id = scored.drop("term", "df_local", "idf").groupBy(
-        "term_id", "doc_group"
-    ).applyInPandas(
-        _make_block_encoder_id(
-            meta.get("block_size", DEFAULT_BLOCK_SIZE),
-            nf,
-            meta.get("wand_shard_span"),
-        ),
-        BLOCKS_ID_SCHEMA,
-    )
+    group_span = meta.get("group_span", DEFAULT_GROUP_TARGET)
     num_buckets = meta["num_buckets"]
-    blocks = (
-        blocks_id.join(tmap.select("term_id", "term"), "term_id")
-        .drop("term_id")
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"),
-        )
-    )
-    (
-        blocks.repartition(max(1, num_buckets // 8), "term_bucket")
-        .sortWithinPartitions("term", "first_doc")
-        .select(*[c.split()[0] for c in BLOCKS_SCHEMA.split(", ")], "term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(out, "blocks"))
-    )
-    postings.groupBy("doc_id").agg(
-        *[F.first(f"fl_{f}").alias(f"fl_{f}") for f in range(nf)]
-    ).repartition(1).write.mode("overwrite").parquet(
-        os.path.join(out, "doc_lens")
+    _write_blocks(
+        postings,
+        tmap.select("term", "term_id", F.col("df_local").alias("df"), "idf"),
+        out,
+        avg_field_lengths=meta["avg_field_lengths"],
+        boosts=meta["field_boosts"], bs=meta["bm25_bs"], k=meta["bm25_k"],
+        num_documents=n_base,
+        block_size=meta.get("block_size", DEFAULT_BLOCK_SIZE),
+        num_buckets=num_buckets, group_span=group_span,
+        hot_df=meta.get("hot_df", DEFAULT_HOT_DF),
+        shard_span=meta.get("wand_shard_span"),
+        # a delta is small: AQE sizes its encode shuffle, and it writes
+        # fewer files than the base
+        encode_parts=None, sink_parts=max(1, num_buckets // 8),
+        doc_lens_parts=1,
     )
     delta_meta = {
         "segment": seg,

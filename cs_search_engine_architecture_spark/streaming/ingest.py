@@ -35,7 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from cs_search_engine_architecture_spark.operators.indexer import (
     DEFAULT_BLOCK_SIZE,
-    DEFAULT_GROUP_SPAN,
+    DEFAULT_GROUP_TARGET,
     DEFAULT_HOT_DF,
     DEFAULT_NUM_BUCKETS,
     REF_K,
@@ -159,7 +159,7 @@ class StreamingIndexer:
             self.spark, postings, num_documents, self.out_path, self.fields,
             doc_id_col=self.doc_id_col, analyzer=self.analyzer,
             block_size=self.block_size, num_buckets=self.num_buckets,
-            group_span=DEFAULT_GROUP_SPAN, hot_df=DEFAULT_HOT_DF,
+            group_span=DEFAULT_GROUP_TARGET, hot_df=DEFAULT_HOT_DF,
             boosts=None, bs=None, k=REF_K,
             corpus_path=f"stream:{self.stage_dir}", t0=time.time(),
             extra_meta={

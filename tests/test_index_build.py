@@ -152,44 +152,132 @@ def test_packed_matches_array_path(spark, analyzer):
     assert arr == packed
 
 
-def test_stream_encoder_identical_to_group_encoder(spark, tmp_path):
-    """The mapInArrow streaming encoder and the groupBy/applyInPandas
-    encoder must write IDENTICAL block rows (bytes included) for the
-    same corpus — small Arrow batches force groups to span batch
-    boundaries (the carry path)."""
-    corpus = spark.createDataFrame(
-        [(d, f[0], f[1]) for d, f in DOCS + [(i + 10, QUIRK_DOCS[i % len(QUIRK_DOCS)][1]) for i in range(40)]],
-        "doc_id long, title string, body string",
+def _decoded_blocks(rows) -> dict:
+    """term -> doc-sorted [(doc_id, score, positions)] decoded from block
+    rows on the driver."""
+    import numpy as np
+
+    from cs_search_engine_architecture_spark.operators.compression import (
+        decode_scores,
+        grouped_delta_decode,
+        varint_decode,
     )
+
+    out: dict[str, list] = {}
+    for r in rows:
+        docs = np.cumsum(varint_decode(r["doc_ids_bin"]), dtype=np.uint64)
+        scores = decode_scores(r["scores_bin"])
+        counts = varint_decode(r["pos_counts_bin"]).astype(np.int64)
+        flat = grouped_delta_decode(varint_decode(r["positions_bin"]), counts)
+        positions = np.split(flat, np.cumsum(counts)[:-1])
+        out.setdefault(r["term"], []).extend(
+            (int(d), float(s), p.astype(int).tolist())
+            for d, s, p in zip(docs, scores, positions)
+        )
+    return {t: sorted(v) for t, v in out.items()}
+
+
+def test_block_layout_matches_oracle(spark, tmp_path):
+    """A layout config small enough to reach every branch of the block
+    writer — 7-row Arrow batches, 3-posting blocks, salted hot terms,
+    blocks split at doc-shard edges — decodes to exactly the oracle's
+    postings; an ``add_docs`` delta written under the same config passes
+    fsck deep and holds the oracle's doc ids and positions."""
+    from cs_search_engine_architecture_spark.operators.fsck import fsck_index
+
+    docs = DOCS + [
+        (i + 10, QUIRK_DOCS[i % len(QUIRK_DOCS)][1]) for i in range(40)
+    ]
+    new_docs = [
+        (i + 100, QUIRK_DOCS[i % len(QUIRK_DOCS)][1]) for i in range(12)
+    ]
+    schema = "doc_id long, title string, body string"
+    out = str(tmp_path / "idx")
     old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        a = str(tmp_path / "stream")
-        b = str(tmp_path / "group")
         indexer.build_index(
-            spark, corpus, a, fields=["title", "body"], block_size=3,
-            num_buckets=4, hot_df=4, group_span=8, shard_span=16,
-            encode_mode="stream",
+            spark,
+            spark.createDataFrame([(d, *f) for d, f in docs], schema),
+            out, fields=["title", "body"], block_size=3, num_buckets=4,
+            hot_df=4, group_span=8, shard_span=16,
         )
-        indexer.build_index(
-            spark, corpus, b, fields=["title", "body"], block_size=3,
-            num_buckets=4, hot_df=4, group_span=8, shard_span=16,
-            encode_mode="group",
+        assert fsck_index(spark, out, deep=True)["ok"]
+        indexer.add_docs(
+            spark, out,
+            spark.createDataFrame([(d, *f) for d, f in new_docs], schema),
         )
     finally:
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", old_batch
         )
-    cols = [c.split()[0] for c in indexer.BLOCKS_SCHEMA.split(", ")]
-    ra = sorted(
-        tuple(r[c] for c in cols)
-        for r in indexer.load_blocks(spark, a).collect()
+    assert fsck_index(spark, out, deep=True)["ok"]
+
+    rows = indexer.load_base_blocks(spark, out).collect()
+    oracle = OracleIndex(docs)
+    got = _decoded_blocks(rows)
+    assert sorted(got) == sorted(oracle.index)
+    for term, plist in oracle.index.items():
+        g = got[term]
+        assert [d for d, _, _ in g] == [p.doc_id for p in plist], term
+        assert [p for _, _, p in g] == [p.positions for p in plist], term
+        for (_, gs, _), p in zip(g, plist):
+            assert gs == pytest.approx(p.score, abs=1e-5), term
+
+    # the config really reached the layout branches
+    assert len(rows) > 10
+    assert any(r["block_no"] >> 32 > 0 for r in rows)  # salted group
+    assert all(r["first_doc"] // 16 == r["last_doc"] // 16 for r in rows)
+    groups: dict[tuple, list] = {}
+    for r in rows:
+        groups.setdefault((r["term"], r["block_no"] >> 32), []).append(r)
+    # a short block that is not its group's last: cut at a shard edge
+    assert any(
+        b["count"] < 3
+        for blist in groups.values()
+        for b in sorted(blist, key=lambda r: r["block_no"])[:-1]
     )
-    rb = sorted(
-        tuple(r[c] for c in cols)
-        for r in indexer.load_blocks(spark, b).collect()
+
+    delta = _decoded_blocks(indexer.load_delta_blocks(spark, out).collect())
+    delta_oracle = OracleIndex(new_docs)
+    assert sorted(delta) == sorted(delta_oracle.index)
+    for term, plist in delta_oracle.index.items():
+        assert [(d, p) for d, _, p in delta[term]] == [
+            (p.doc_id, p.positions) for p in plist
+        ], term
+
+
+def test_concurrent_builds_report_own_phase_walls(spark, tmp_path):
+    """Two builds on two threads of one driver each finish and return
+    their own five phase walls: the walls are per call, so neither build
+    clears or mixes the other's."""
+    import threading
+
+    corpus = spark.createDataFrame(
+        [(d, f[0], f[1]) for d, f in DOCS],
+        "doc_id long, title string, body string",
     )
-    assert ra == rb and len(ra) > 10
+    metas: dict[str, dict] = {}
+
+    def run(name: str) -> None:
+        metas[name] = indexer.build_index(
+            spark, corpus, str(tmp_path / name), fields=["title", "body"],
+            num_buckets=4,
+        )
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in ("a", "b")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+        assert not t.is_alive()
+    assert sorted(metas) == ["a", "b"]
+    for meta in metas.values():
+        assert set(meta["phase_walls"]) == {
+            "tokenize_stage", "global_stats", "term_stats_write",
+            "score_encode_write", "doc_lens_write",
+        }
+        assert meta["num_postings"] == OracleIndex(DOCS).num_postings
 
 
 def test_missing_term_empty(built):

@@ -77,9 +77,9 @@ def test_add_docs_slot_skips_live_ingest_namespace(spark, tmp_path):
 
 def test_compact_preserves_block_layout_config(spark, tmp_path):
     """compact_index defaults every build parameter to the OLD meta —
-    including the layout knobs (wand_shard_span/group_span/hot_df/
-    encode_mode), where shard_span=None is a deliberate choice that
-    must not silently revert to the default span."""
+    including the layout knobs (wand_shard_span/group_span/hot_df),
+    where shard_span=None is a deliberate choice that must not silently
+    revert to the default span."""
     out = _build(spark, tmp_path, shard_span=None, hot_df=1 << 10)
     meta = indexer.load_meta(out)
     assert meta["wand_shard_span"] is None
@@ -89,7 +89,6 @@ def test_compact_preserves_block_layout_config(spark, tmp_path):
     assert meta2["wand_shard_span"] is None
     assert meta2["hot_df"] == 1 << 10
     assert meta2["group_span"] == meta["group_span"]
-    assert meta2["encode_mode"] == meta["encode_mode"]
 
 
 def test_build_rejects_out_of_domain_doc_ids(spark, tmp_path):

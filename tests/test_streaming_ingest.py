@@ -496,3 +496,28 @@ def test_percolate_stream_with_filters(spark):
             analyzer="simple", filters={"other": "lang = 'en'"},
         )
     shutil.rmtree(base, ignore_errors=True)
+
+
+def test_compact_reports_only_its_own_phase_walls(spark, tmp_path):
+    """phase_walls are per call: a streaming compact that follows a
+    one-shot build in the same driver reports its own finalize phases
+    only — no stale ``tokenize_stage`` carried over from the build."""
+    rows = [(i, f"spark data doc {i}", "en", "s", 16) for i in range(20)]
+    df = spark.createDataFrame(rows, SCHEMA)
+    build_index(
+        spark, df, str(tmp_path / "built"), fields=["text"],
+        analyzer="simple", num_buckets=4,
+    )
+    src = str(tmp_path / "incoming")
+    df.coalesce(1).write.parquet(src)
+    ing = StreamingIndexer(
+        spark, str(tmp_path / "idx"), fields=["text"], analyzer="simple",
+        num_buckets=4,
+    )
+    ing.ingest_available(stream_corpus(spark, src, SCHEMA))
+    walls = ing.compact()["phase_walls"]
+    assert "tokenize_stage" not in walls
+    assert set(walls) == {
+        "global_stats", "term_stats_write", "score_encode_write",
+        "doc_lens_write",
+    }
