@@ -18,6 +18,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cs_search_engine_architecture_spark.operators import indexer
+from cs_search_engine_architecture_spark.operators.msearch import (
+    classify_query,
+    leaf_terms,
+)
 from cs_search_engine_architecture_spark.plans.compiler import QueryCompiler
 from cs_search_engine_architecture_spark.plans.query_parser import (
     parse_query,
@@ -235,19 +239,22 @@ class SearchEngine:
         # mask count (> _TOMB_FASTPATH_CAP) falls back to the masked
         # join path; compact_index resets both counts to 0.
         k_fetch = top_k
+        over_cap = False
         if self.tombstones is not None:
             t_count = self._num_tombstones()
             u_count = self._num_updated() if upd else 0
-            if t_count + u_count > self._TOMB_FASTPATH_CAP:
-                self.last_strategy = (
-                    "join_masked_update_arm" if upd else "join_masked"
-                )
-                return (
-                    self._scored(ast)
-                    .orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(top_k)
-                )
+            over_cap = t_count + u_count > self._TOMB_FASTPATH_CAP
             k_fetch = top_k + t_count + u_count
+        route, terms = self._route(ast, over_cap)
+        span = self.meta.get("wand_shard_span")
+        arm_tag = "+delta_arm" if self.has_delta else ""
+        if route == "single_term_blockmax":
+            strategy = route + ("+update_arm" if upd else "")
+        elif route in ("wand_or", "wand_and"):
+            strategy = route + ("_sharded" if span else "") + arm_tag
+        else:
+            strategy = "join_masked_update_arm" if upd else route
+        self.last_strategy = strategy
 
         def _finish(raw: DataFrame) -> DataFrame:
             if self.tombstones is None:
@@ -259,89 +266,91 @@ class SearchEngine:
                 out.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
             )
 
-        if ast and ast["type"] == "token":
-            self.last_strategy = (
-                "single_term_blockmax+update_arm" if upd
-                else "single_term_blockmax"
-            )
-            return _finish(self._topk_single_term(ast["value"], k_fetch))
-        # WAND pays 2 extra driver round-trips; below ~1M postings the
-        # join path's single job is cheaper (same scale gate as the
-        # single-term block-max path — at cluster scale WAND always wins).
-        # With a populated delta tier (adds and/or pending updates) the
-        # kernel runs over BASE blocks only — the kernel's coverage
-        # bounds assume one term's blocks are doc-disjoint, which an
-        # updated doc's two live versions (base old + delta new) would
-        # violate, and delta block ranges can interleave base ranges.
-        # Base blocks always satisfy the bound (one build, one version
-        # per doc), so: exact base top-k from the kernel, tombstones
-        # masked (old versions of updated docs die here), then the
-        # delta arm (a delta-only compile of the SAME ast — every delta
-        # doc's complete postings live there) unions in and the union
-        # re-limits. WAND routing therefore survives adds AND pending
-        # in-place updates; merge/compact only shrink the arm.
-        if self.meta.get("num_postings", 0) >= 1_000_000:
+        if route == "single_term_blockmax":
+            return _finish(self._topk_single_term(terms[0], k_fetch))
+        if route in ("wand_or", "wand_and"):
+            # With a populated delta tier (adds and/or pending updates)
+            # the kernel runs over BASE blocks only — the kernel's
+            # coverage bounds assume one term's blocks are doc-disjoint,
+            # which an updated doc's two live versions (base old + delta
+            # new) would violate, and delta block ranges can interleave
+            # base ranges. Base blocks always satisfy the bound (one
+            # build, one version per doc), so: exact base top-k from the
+            # kernel, tombstones masked (old versions of updated docs
+            # die here), then the delta arm (a delta-only compile of the
+            # SAME ast — every delta doc's complete postings live there)
+            # unions in and the union re-limits. WAND routing therefore
+            # survives adds AND pending in-place updates; merge/compact
+            # only shrink the arm.
             from cs_search_engine_architecture_spark.operators import wand
 
-            def _finish_wand(raw: DataFrame) -> DataFrame:
-                if not self.has_delta:
-                    return _finish(raw)
-                out = self._mask(raw).unionByName(self._delta_arm(ast))
-                return (
-                    out.orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(top_k)
+            if span:
+                # shard-aligned indexes serve from the cached
+                # pre-sharded layout with NO per-query exchange
+                kernel = (
+                    wand.wand_or_topk_sharded if route == "wand_or"
+                    else wand.wand_and_topk_sharded
                 )
-
-            kernel_blocks = (
-                self._base_blocks_df() if self.has_delta else self.blocks
-            )
-            arm_tag = "+delta_arm" if self.has_delta else ""
-            span = self.meta.get("wand_shard_span")
-            flat_or = self._flat_op_terms(ast, "or")
-            if flat_or:
-                # scored disjunctions: partition-parallel block-max WAND
-                # instead of a chain of full-outer joins; shard-aligned
-                # indexes serve from the cached pre-sharded layout with
-                # NO per-query exchange
-                self.last_strategy = (
-                    "wand_or_sharded" if span else "wand_or"
-                ) + arm_tag
-                if span:
-                    return _finish_wand(wand.wand_or_topk_sharded(
-                        self._wand_sharded(), flat_or, k_fetch, span
-                    ))
-                return _finish_wand(wand.wand_or_topk(
-                    self.spark, kernel_blocks, self.num_buckets, flat_or,
-                    k_fetch,
-                ))
-            flat_and = self._flat_op_terms(ast, "and")
-            if flat_and:
-                # conjunctions: metadata range-skip intersection — blocks
-                # whose doc range overlaps no block of some other term
-                # never decode. Pays only when a SELECTIVE term exists
-                # (sparse ranges skip the hot term's blocks); dense-only
-                # conjunctions intersect faster as a broadcast/SMJ join.
-                dfs = self._term_dfs(flat_and)
-                if min(dfs.values(), default=0) <= max(
-                    10_000, self.meta["num_postings"] // 200
-                ):
-                    self.last_strategy = (
-                        "wand_and_sharded" if span else "wand_and"
-                    ) + arm_tag
-                    if span:
-                        return _finish_wand(wand.wand_and_topk_sharded(
-                            self._wand_sharded(), flat_and, k_fetch, span
-                        ))
-                    return _finish_wand(wand.wand_and_topk(
-                        self.spark, kernel_blocks, self.num_buckets,
-                        flat_and, k_fetch,
-                    ))
-        self.last_strategy = "join_masked_update_arm" if upd else "join"
+                raw = kernel(self._wand_sharded(), terms, k_fetch, span)
+            else:
+                kernel = (
+                    wand.wand_or_topk if route == "wand_or"
+                    else wand.wand_and_topk
+                )
+                raw = kernel(
+                    self.spark,
+                    self._base_blocks_df() if self.has_delta else self.blocks,
+                    self.num_buckets, terms, k_fetch,
+                )
+            if not self.has_delta:
+                return _finish(raw)
+            out = self._mask(raw).unionByName(self._delta_arm(ast))
+            return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
         return (
             self._scored(ast)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(top_k)
         )
+
+    def _route(self, ast, over_cap: bool) -> tuple[str, list[str]]:
+        """(route, terms) for ``search`` from the query's
+        ``classify_query`` shape: a single term -> block-max; a flat OR
+        / AND of DISTINCT terms at >= 1M postings -> WAND (AND only when
+        a selective term exists); everything else -> the compiled join
+        plan ("join_masked" when the tombstone/update mask exceeds the
+        fast-path cap)."""
+        if over_cap:
+            return "join_masked", []
+        shape = classify_query(ast)
+        kind, terms = (shape[0], shape[1]) if shape else (None, [])
+        if kind == "or" and len(terms) == 1:
+            return "single_term_blockmax", terms
+        # WAND pays 2 extra driver round-trips; below ~1M postings the
+        # join path's single job is cheaper (same scale gate as the
+        # single-term block-max path — at cluster scale WAND always
+        # wins). Duplicate terms double-count in the summed score; the
+        # join path reproduces that reference quirk, so they stay there.
+        if (
+            kind not in ("or", "and")
+            or len(set(terms)) != len(terms)
+            or self.meta.get("num_postings", 0) < 1_000_000
+        ):
+            return "join", []
+        if kind == "or":
+            # scored disjunctions: partition-parallel block-max WAND
+            # instead of a chain of full-outer joins
+            return "wand_or", terms
+        # conjunctions: metadata range-skip intersection — blocks whose
+        # doc range overlaps no block of some other term never decode.
+        # Pays only when a SELECTIVE term exists (sparse ranges skip the
+        # hot term's blocks); dense-only conjunctions intersect faster
+        # as a broadcast/SMJ join.
+        dfs = self._term_dfs(terms)
+        if min(dfs.values(), default=0) <= max(
+            10_000, self.meta["num_postings"] // 200
+        ):
+            return "wand_and", terms
+        return "join", []
 
     # the routing decision of the most recent search() — observability
     # for plan_info and perf triage; never consulted by the engine
@@ -405,27 +414,6 @@ class SearchEngine:
             for t in missing:
                 self._df_cache[t] = found.get(t, 0)
         return {t: self._df_cache[t] for t in terms}
-
-    @staticmethod
-    def _flat_op_terms(ast, op: str) -> list[str] | None:
-        """Token list if the AST is a pure ``op``-of-tokens tree."""
-        terms: list[str] = []
-
-        def walk(node) -> bool:
-            if not node:
-                return False
-            if node["type"] == "token":
-                terms.append(node["value"])
-                return True
-            if node["type"] == "operator" and node["operator"] == op:
-                return walk(node["left"]) and walk(node["right"])
-            return False
-
-        if ast and ast.get("type") == "operator" and walk(ast):
-            # duplicate terms double-count in the summed score; the join
-            # path reproduces that reference quirk, so bail out to it
-            return terms if len(set(terms)) == len(terms) else None
-        return None
 
     def _topk_single_term(self, term: str, k: int) -> DataFrame:
         """Block-max top-k (north rule: per-block max-score skipping —
@@ -564,20 +552,10 @@ class SearchEngine:
         fallback: list[DataFrame] = []
         for qid, qstr in queries.items():
             ast = parse_query(qstr, analyzer=analyzer)
-            plan = ms.classify_query(ast)
-            if plan is not None and plan[0] == "phrase":
-                phrases.append((qid, plan[1]))
-            elif plan is not None:
-                # ("or"/"and", terms) or ("and_not", pos, neg) — pass
-                # the whole plan through to the shared-scan batcher
-                batchable.append((qid, *plan))
-            elif ast is not None and ms.term_only_tree(ast):
-                # mixed-precedence term-only tree: the 8-case lazy-NOT
-                # algebra evaluates per doc over a shared term->score
-                # map — bit-identical scores to the compiled plan,
-                # one scan for all such queries
-                mixed.append((qid, ast))
-            else:
+            plan = classify_query(ast)
+            if plan is None:
+                # empty query or a phrase inside a tree: its own
+                # compiled plan, tagged with the query id
                 scored = self._scored(ast)
                 if allowed is not None:
                     scored = scored.join(allowed, "doc_id", "left_semi")
@@ -589,6 +567,18 @@ class SearchEngine:
                         F.lit(qid).alias("query_id"), "doc_id", "score"
                     )
                 )
+            elif plan[0] == "phrase":
+                phrases.append((qid, plan[1]))
+            elif plan[0] == "mixed":
+                # term-only tree: the 8-case lazy-NOT algebra evaluates
+                # per doc over a shared term->score map — bit-identical
+                # scores to the compiled plan, one scan for all such
+                # queries
+                mixed.append((qid, plan[1]))
+            else:
+                # ("or"/"and", terms) or ("and_not", pos, neg) — pass
+                # the whole plan through to the shared-scan batcher
+                batchable.append((qid, *plan))
         # With in-place updates pending, the shared-scan batchers run
         # over the unified blocks with the FULL tombstone mask (an
         # updated doc would double-score across base+delta, so the mask
@@ -790,25 +780,9 @@ class SearchEngine:
 
     def _leaf_terms(self, query: str) -> list[str]:
         """Unique leaf terms of the parsed query, in first-seen order."""
-        ast = parse_query(query, analyzer=self.meta.get("analyzer", "reference"))
-        terms: list[str] = []
-
-        def walk(node) -> None:
-            if not node:
-                return
-            if node["type"] == "token":
-                if node["value"] not in terms:
-                    terms.append(node["value"])
-            elif node["type"] == "phrase":
-                for v in node["values"]:
-                    if v not in terms:
-                        terms.append(v)
-            else:
-                walk(node.get("left"))
-                walk(node.get("right"))
-
-        walk(ast)
-        return terms
+        return leaf_terms(
+            parse_query(query, analyzer=self.meta.get("analyzer", "reference"))
+        )
 
     def prefix_search(
         self, prefix: str, top_k: int = 10, max_expansion: int = 128,

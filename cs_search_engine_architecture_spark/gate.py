@@ -143,23 +143,12 @@ LIMIT 10
 """
 
 
-def q_bool_and_not(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eng = gate_engine(spark, sf_dir)
-    return eng.search_df("data and not slow").select("doc_id")
-
-
 SQL_BOOL_AND_NOT = f"""
 WITH toks AS ({TOKS_CTE})
 SELECT DISTINCT doc_id FROM toks WHERE term = 'data'
 EXCEPT
 SELECT DISTINCT doc_id FROM toks WHERE term = 'slow'
 """
-
-
-def q_bool_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # or(spark, and(data, slow)) — and binds tighter (sea/query.pyx:71-74)
-    eng = gate_engine(spark, sf_dir)
-    return eng.search_df("spark or data and slow").select("doc_id")
 
 
 SQL_BOOL_PRECEDENCE = f"""
@@ -453,18 +442,10 @@ _DUCK_TOKS_CTE = (
 )
 
 
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TA.language_id(_docs(spark, sf_dir))
-
-
 SQL_LANG_ID = (
     f"WITH t AS ({_DUCK_TOKS_CTE}) "
     f"SELECT doc_id, {TA.lang_id_sql(D.DUCKDB)} AS lang_pred FROM t"
 )
-
-
-def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TA.quality_scores(_docs(spark, sf_dir))
 
 
 SQL_QUALITY_SCORES = (
@@ -474,10 +455,6 @@ SQL_QUALITY_SCORES = (
 )
 
 
-def q_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TA.repetition_scores(_docs(spark, sf_dir))
-
-
 SQL_REPETITION_SCORES = (
     f"WITH t AS ({_DUCK_TOKS_CTE}) SELECT doc_id, "
     + ", ".join(f"{e} AS {k}" for k, e in TA.repetition_sql(D.DUCKDB).items())
@@ -485,19 +462,11 @@ SQL_REPETITION_SCORES = (
 )
 
 
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TA.token_counts(_docs(spark, sf_dir))
-
-
 SQL_TOKEN_COUNTS = (
     f"WITH t AS ({_DUCK_TOKS_CTE}) SELECT doc_id, "
     + ", ".join(f"{e} AS {k}" for k, e in TA.token_counts_sql(D.DUCKDB).items())
     + " FROM t"
 )
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TA.fingerprints(_docs(spark, sf_dir))
 
 
 SQL_FINGERPRINT = (
@@ -849,10 +818,6 @@ FROM g"""
 JACCARD_MIN = 0.2
 
 
-def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.ngram_jaccard_pairs(_docs(spark, sf_dir), min_jaccard=JACCARD_MIN)
-
-
 SQL_DEDUP_JACCARD_PAIRS = f"""
 WITH {_DUCK_CAND_CTE},
 shl AS (SELECT doc_id, list_distinct({D.shingles(D.DUCKDB)}) AS sh
@@ -986,12 +951,6 @@ FROM events GROUP BY window_start, event_type
 """
 
 CONTAINMENT_MIN = 0.5
-
-
-def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.ngram_containment_pairs(
-        _docs(spark, sf_dir), min_containment=CONTAINMENT_MIN
-    )
 
 
 # oracle is BRUTE FORCE over all pairs: the Spark side only scores
@@ -1171,25 +1130,12 @@ FROM w ORDER BY cos DESC, id ASC LIMIT 10
 SQL_ANN_IVF_TOPK = _sql_ann_ivf_topk()
 
 
-def q_blob_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.to_blob_table(_docs(spark, sf_dir)).select(
-        "doc_id", "mime", "n_bytes", "payload_sha256"
-    )
-
-
 SQL_BLOB_METADATA = """
 SELECT doc_id, 'image/fake' AS mime,
        CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
        sha256(text) AS payload_sha256
 FROM documents
 """
-
-
-def q_blob_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    blobs = MM.to_blob_table(_docs(spark, sf_dir))
-    return MM.decode_features(blobs).select(
-        "doc_id", "n_bytes", "fake_width", "fake_height", "mean_byte"
-    )
 
 
 # the fixture text is pure ASCII, so byte values == ascii(char); the

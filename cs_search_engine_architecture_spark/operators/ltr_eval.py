@@ -74,50 +74,6 @@ def sample_queries(
     return out
 
 
-def label_candidates(
-    docs: DataFrame, cand_ids: list[int], query_terms: list[str]
-) -> dict[int, float]:
-    """Graded 0-3 relevance per candidate: bigram containment of the
-    query's token run in the candidate's token stream (order-sensitive
-    text overlap — independent of BM25 weighting)."""
-    qgrams = [
-        f"{a} {b}" for a, b in zip(query_terms, query_terms[1:])
-    ]
-    lit_grams = F.array(*[F.lit(g) for g in qgrams])
-    labeled = (
-        docs.where(F.col("doc_id").isin([int(i) for i in cand_ids]))
-        .select(
-            "doc_id",
-            F.expr(
-                "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
-            ).alias("__toks"),
-        )
-        .select(
-            "doc_id",
-            F.round(
-                F.lit(3.0)
-                * F.size(
-                    F.array_intersect(F.expr(_DOC_BIGRAMS), lit_grams)
-                )
-                / F.lit(float(len(qgrams)))
-            ).alias("rel"),
-        )
-    )
-    return {r["doc_id"]: float(r["rel"]) for r in labeled.collect()}
-
-
-def rel_col(query_terms: list[str]) -> "F.Column":
-    """Graded 0-3 relevance column over a ``__toks`` token-array column
-    (see ``label_candidates``)."""
-    qgrams = [f"{a} {b}" for a, b in zip(query_terms, query_terms[1:])]
-    lit_grams = F.array(*[F.lit(g) for g in qgrams])
-    return F.round(
-        F.lit(3.0)
-        * F.size(F.array_intersect(F.expr(_DOC_BIGRAMS), lit_grams))
-        / F.lit(float(len(qgrams)))
-    )
-
-
 def build_groups(
     eng: SearchEngine,
     docs: DataFrame,

@@ -28,9 +28,12 @@ the consecutive-slot char-window conjunction, and a slot-ordered left
 fold reproducing the compiled chain's scores bit-for-bit. Flat AND-NOT
 trees batch as well — negated terms ride the shared scan as weight-0
 presence rows and any match kills the (query, doc) pair (the compiler's
-left-anti by De Morgan). Only mixed-precedence queries fall back to
-their individual compiled plans, tagged with the query_id and unioned
-in — still one Spark job.
+left-anti by De Morgan). Mixed-precedence TERM-ONLY trees share one
+term->score map aggregation (``mixed_batched_topk``). Only phrases
+nested inside trees fall back to their individual compiled plans,
+tagged with the query_id and unioned in — still one Spark job.
+``classify_query`` is the one shape decision all of these (and
+``engine.search``'s router and ``percolate``) dispatch on.
 
 At 100 TB the win is structural: the postings scan is shared across the
 whole batch (a hot term referenced by 500 queries is read and decoded
@@ -303,61 +306,34 @@ def phrase_batched_topk(
     )
 
 
-def term_only_tree(ast) -> bool:
-    """True when every leaf is a plain token and every operator is
-    and/or/not — the mixed-precedence shape ``mixed_batched_topk``
-    serves from one shared scan (phrase/proximity leaves keep the
-    per-query compiled fallback)."""
-    if not ast:
-        return False
+def _mixed_scored_exprs(ast, leaf) -> tuple:
+    """(present Column, score Column, is_complement) for a term-only
+    tree — the compiler's 8-case lazy-NOT algebra
+    (``plans/compiler.py:160-215``) as Columns, with ``leaf(term) ->
+    (present, score)`` supplying each token leaf. The JOIN SCORE
+    ARITHMETIC is mirrored bit-for-bit: inner join -> l + r in that
+    order; full-outer union -> (l present ? l : 0.0) + (r present ? r :
+    0.0) (identical IEEE ops to the compiled coalesce(l,0)+coalesce(r,0));
+    anti-join -> the surviving side's score untouched. ``present``
+    implies ``score`` is non-null, by induction. True negation (plain
+    ``~`` of a whole operand) never reaches the result: complements stay
+    lazy and callers discard the top-level flag, so a surviving NOT
+    yields its operand's matches — the compiled plans' quirk included.
+
+    The whole algebra is doc-POINTWISE (every compiled join keys on
+    doc_id alone), so evaluating it per doc is exact. Two callers:
+    ``mixed_batched_topk`` (leaf = the doc's term->score map ``m``) and
+    ``percolate``'s mixed arm (leaf = membership in the doc's matched
+    term set; ``score`` unused)."""
     if ast["type"] == "token":
-        return True
-    if ast["type"] == "operator":
-        if ast["operator"] == "not":
-            return term_only_tree(ast["right"])
-        return term_only_tree(ast.get("left")) and term_only_tree(
-            ast.get("right")
-        )
-    return False
-
-
-def _tree_tokens(ast) -> set[str]:
-    """All token leaves of a term-only tree (unary-NOT nodes carry a
-    falsy ``left: {}`` placeholder — skipped)."""
-    if ast["type"] == "token":
-        return {ast["value"]}
-    out = set()
-    if ast.get("left"):
-        out |= _tree_tokens(ast["left"])
-    out |= _tree_tokens(ast["right"])
-    return out
-
-
-def _mixed_scored_exprs(ast) -> tuple:
-    """(present Column, score Column, is_complement) over a per-doc
-    ``m`` map column (term -> that doc's BM25 term score) — the
-    compiler's 8-case lazy-NOT algebra (``plans/compiler.py:160-215``)
-    with the JOIN SCORE ARITHMETIC mirrored bit-for-bit: inner join ->
-    l + r in that order; full-outer union -> (l present ? l : 0.0) +
-    (r present ? r : 0.0) (identical IEEE ops to the compiled
-    coalesce(l,0)+coalesce(r,0)); anti-join -> the surviving side's
-    score untouched. ``present`` implies ``score`` is non-null, by
-    induction. Because the whole algebra is doc-POINTWISE (every
-    compiled join keys on doc_id alone), evaluating it per doc over
-    the term->score map is exact."""
-    if ast["type"] == "token":
-        t = F.lit(ast["value"])
-        return (
-            F.map_contains_key(F.col("m"), t),
-            F.element_at(F.col("m"), t),
-            False,
-        )
+        p, s = leaf(ast["value"])
+        return p, s, False
     op = ast["operator"]
     if op == "not":
-        p, s, n = _mixed_scored_exprs(ast["right"])
+        p, s, n = _mixed_scored_exprs(ast["right"], leaf)
         return p, s, not n
-    lp, ls, ln = _mixed_scored_exprs(ast["left"])
-    rp, rs, rn = _mixed_scored_exprs(ast["right"])
+    lp, ls, ln = _mixed_scored_exprs(ast["left"], leaf)
+    rp, rs, rn = _mixed_scored_exprs(ast["right"], leaf)
 
     def union_score():
         return F.when(lp, ls).otherwise(F.lit(0.0)) + F.when(
@@ -418,9 +394,7 @@ def mixed_batched_topk(
     single (present, score) projection past whole-stage codegen's JIT
     limit and falls back to interpreted — still one pass, correctness
     unaffected (same caveat as percolate's mixed arm)."""
-    all_terms = sorted(
-        {t for _, ast in plans for t in _tree_tokens(ast)}
-    )
+    all_terms = sorted({t for _, ast in plans for t in leaf_terms(ast)})
     postings = multi_term_postings(blocks, all_terms, num_buckets)
     if exclude is not None:
         postings = postings.join(
@@ -431,9 +405,17 @@ def mixed_batched_topk(
             F.collect_list(F.struct("term", "score"))
         ).alias("m")
     )
+
+    def score_map_leaf(term: str) -> tuple:
+        t = F.lit(term)
+        return (
+            F.map_contains_key(F.col("m"), t),
+            F.element_at(F.col("m"), t),
+        )
+
     structs = []
     for qid, ast in plans:
-        present, score, _ = _mixed_scored_exprs(ast)
+        present, score, _ = _mixed_scored_exprs(ast, score_map_leaf)
         structs.append(
             F.when(
                 present,
@@ -458,9 +440,35 @@ def mixed_batched_topk(
     )
 
 
+def _leaves(node) -> Iterator[dict]:
+    """Token and phrase leaves of an AST, left to right (unary-NOT nodes
+    carry a falsy ``left: {}`` placeholder — skipped)."""
+    if not node:
+        return
+    if node["type"] == "operator":
+        yield from _leaves(node.get("left"))
+        yield from _leaves(node["right"])
+    else:
+        yield node
+
+
+def leaf_terms(ast) -> list[str]:
+    """Unique token and phrase-member terms of ``ast``, in first-seen
+    (left-to-right) order; ``[]`` for an empty query."""
+    return list(
+        dict.fromkeys(
+            t
+            for leaf in _leaves(ast)
+            for t in (
+                leaf["values"] if leaf["type"] == "phrase" else [leaf["value"]]
+            )
+        )
+    )
+
+
 def _flat_terms(ast, op: str) -> list[str] | None:
-    """Leaf terms if ``ast`` is a pure tree of ``op`` over tokens
-    (mirrors ``SearchEngine._flat_op_terms``); None otherwise."""
+    """Leaf terms if ``ast`` is a pure tree of ``op`` over tokens;
+    None otherwise."""
     out: list[str] = []
 
     def walk(node) -> bool:
@@ -517,13 +525,23 @@ def _flat_and_not(ast) -> tuple[list[str], list[str]] | None:
 
 
 def classify_query(ast) -> tuple | None:
-    """(mode, terms) when the query is batchable: "or"/"and" for the
-    join form, "phrase" for a pure phrase (``phrase_batched_topk``),
-    ("and_not", pos_terms, neg_terms) for flat AND-NOT trees; None for
-    mixed precedence (compiled-plan fallback). Top-level unary-NOT
-    wrappers are stripped first — the compiler discards the root
-    complement flag, so ``not X`` classifies (and scores) exactly as
-    ``X``."""
+    """The query's SHAPE — the one routing decision ``engine.search``,
+    ``engine.msearch`` and ``percolate`` all dispatch on:
+
+    * ``("or", terms)`` / ``("and", terms)`` — a single token (as a
+      one-term "or") or a flat OR / AND of tokens (repeated terms kept:
+      they double-count in the score);
+    * ``("and_not", pos_terms, neg_terms)`` — a flat AND-NOT tree;
+    * ``("phrase", values)`` — a pure phrase;
+    * ``("mixed", ast)`` — any other tree of tokens under and/or/not
+      (the lazy-NOT algebra of ``_mixed_scored_exprs``);
+    * ``None`` — empty query, or a phrase inside a tree (compiled-plan
+      fallback).
+
+    Top-level unary-NOT wrappers are stripped first — the compiler
+    discards the root complement flag, so ``not X`` classifies (and
+    scores) exactly as ``X``; the ``ast`` of a "mixed" shape is the
+    stripped tree."""
     ast = strip_top_not(ast)
     if ast is None:
         return None
@@ -538,7 +556,58 @@ def classify_query(ast) -> tuple | None:
     an = _flat_and_not(ast)
     if an:
         return ("and_not", an[0], an[1])
+    if all(leaf["type"] == "token" for leaf in _leaves(ast)):
+        return ("mixed", ast)
     return None
+
+
+TERM_PLAN_SCHEMA = (
+    "query_id string, term string, weight double, required int, is_neg int"
+)
+
+
+def term_plan_rows(plans: list[tuple]) -> list[tuple]:
+    """Broadcast ``(query_id, term, weight, required, is_neg)`` rows
+    (``TERM_PLAN_SCHEMA``) for ``(query_id, mode, terms[, neg_terms[,
+    msm]])`` plans — one row per DISTINCT positive term (``weight`` =
+    its multiplicity, or its boost when ``terms`` is a dict) and one
+    weight-0 ``is_neg`` row per distinct negated term. ``required`` is
+    the distinct positive-term count for "and"/"and_not" plans and the
+    optional minimum_should_match (default 0) for "or" plans."""
+    rows = []
+    for plan in plans:
+        query_id, mode, terms = plan[0], plan[1], plan[2]
+        negs = plan[3] if len(plan) > 3 else []
+        # optional 5th element: minimum_should_match for "or" plans —
+        # a doc must match at least this many DISTINCT query terms
+        msm = int(plan[4]) if len(plan) > 4 else 0
+        if isinstance(terms, dict):
+            # explicit per-term boosts (engine.boosted_search): the dict
+            # IS the weight column — fractional boosts ride the same
+            # broadcast map integer multiplicity uses
+            distinct: dict[str, float] = {t: float(w) for t, w in terms.items()}
+        else:
+            distinct = {}
+            for t in terms:
+                distinct[t] = distinct.get(t, 0) + 1
+        required = len(distinct) if mode in ("and", "and_not") else msm
+        for t, w in distinct.items():
+            rows.append((query_id, t, float(w), required, 0))
+        for t in set(negs):
+            rows.append((query_id, t, 0.0, required, 1))
+    return rows
+
+
+def term_plan_hit() -> "F.Column":
+    """Hit filter over a ``(matched, required, neg_hit)`` aggregation of
+    postings joined to ``term_plan_rows``. >= not ==: for AND/AND-NOT
+    plans matched can never exceed required (each distinct term
+    contributes at most one row per doc), so >= is equivalent there —
+    and it makes "or" plans' minimum_should_match (required = msm <
+    len(terms)) work on the same column."""
+    return (
+        (F.col("required") == 0) | (F.col("matched") >= F.col("required"))
+    ) & (F.col("neg_hit") == 0)
 
 
 def batched_topk(
@@ -567,33 +636,9 @@ def batched_topk(
     is semi-joined at the same point, so each query's page is the exact
     top-k of the admitted set.
     """
-    rows = []
-    for plan in plans:
-        query_id, mode, terms = plan[0], plan[1], plan[2]
-        negs = plan[3] if len(plan) > 3 else []
-        # optional 5th element: minimum_should_match for "or" plans —
-        # a doc must match at least this many DISTINCT query terms
-        msm = int(plan[4]) if len(plan) > 4 else 0
-        if isinstance(terms, dict):
-            # explicit per-term boosts (engine.boosted_search): the dict
-            # IS the weight column — fractional boosts ride the same
-            # broadcast map integer multiplicity uses
-            distinct: dict[str, float] = {t: float(w) for t, w in terms.items()}
-        else:
-            distinct = {}
-            for t in terms:
-                distinct[t] = distinct.get(t, 0) + 1
-        required = len(distinct) if mode in ("and", "and_not") else msm
-        for t, w in distinct.items():
-            rows.append((query_id, t, float(w), required, 0))
-        for t in set(negs):
-            rows.append((query_id, t, 0.0, required, 1))
-    qterms = spark.createDataFrame(
-        rows,
-        "query_id string, term string, weight double, required int, "
-        "is_neg int",
-    )
-    all_terms = sorted({t for _, t, _, _, _ in rows})
+    rows = term_plan_rows(plans)
+    qterms = spark.createDataFrame(rows, TERM_PLAN_SCHEMA)
+    all_terms = sorted({row[1] for row in rows})
     postings = multi_term_postings(blocks, all_terms, num_buckets)
     joined = postings.join(F.broadcast(qterms), "term")
     agg = joined.groupBy("query_id", "doc_id").agg(
@@ -602,14 +647,7 @@ def batched_topk(
         F.max("required").alias("required"),
         F.max("is_neg").alias("neg_hit"),
     )
-    # >= not ==: for AND/AND-NOT plans matched can never exceed required
-    # (each distinct term contributes at most one row per doc), so >= is
-    # equivalent there — and it makes "or" plans' minimum_should_match
-    # (required = msm < len(terms)) work on the same column
-    hits = agg.where(
-        ((F.col("required") == 0) | (F.col("matched") >= F.col("required")))
-        & (F.col("neg_hit") == 0)
-    )
+    hits = agg.where(term_plan_hit())
     if exclude is not None:
         hits = hits.join(F.broadcast(exclude), "doc_id", "left_anti")
     if allowed is not None:

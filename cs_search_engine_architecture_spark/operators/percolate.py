@@ -10,10 +10,14 @@ kernel shape); ALL mixed-precedence TERM-ONLY boolean trees share ONE
 matched-term-set aggregation, each query's compiled lazy-NOT De Morgan
 algebra (``plans/compiler.py:160-215``) evaluated as a boolean Column
 over the doc's term set, INCLUDING the top-level complement-flag
-discard quirk (``sea/engine.pyx:531-553``) — so a registered query
-fires on exactly the docs the engine's search would return, and the
-whole registry costs at most THREE aggregations per batch however
-many queries are registered. A corollary of the lazy
+discard quirk (``sea/engine.pyx:531-553``). That Column comes from
+msearch's ``_mixed_scored_exprs`` — the one algebra the batched mixed
+msearch arm scores with — fed a set-membership leaf, and every
+query's class comes from ``classify_query``, the router search and
+msearch use. So a registered query fires on exactly the docs the
+engine's search would return, and the whole registry costs at most
+THREE aggregations per batch however many queries are registered. A
+corollary of the lazy
 algebra is that every match is a subset of the query's leaf-term
 posting union: a doc containing NONE of a query's terms can never
 match, so term-join candidates are complete. Only a phrase nested
@@ -48,7 +52,13 @@ from cs_search_engine_architecture_spark.operators.indexer import (
     tokenize_presence,
 )
 from cs_search_engine_architecture_spark.operators.msearch import (
+    TERM_PLAN_SCHEMA,
+    _mixed_scored_exprs,
     classify_query,
+    leaf_terms,
+    slot_chain_window_ok,
+    term_plan_hit,
+    term_plan_rows,
 )
 from cs_search_engine_architecture_spark.operators.partitioning import (
     widen_input,
@@ -57,72 +67,6 @@ from cs_search_engine_architecture_spark.oracle.reference import PHRASE_K
 from cs_search_engine_architecture_spark.plans.query_parser import (
     parse_query,
 )
-
-
-def _ast_leaf_terms(ast) -> tuple[set[str], bool]:
-    """(all leaf terms, contains_phrase) of a parsed AST."""
-    terms: set[str] = set()
-    has_phrase = False
-
-    def walk(node) -> None:
-        nonlocal has_phrase
-        if not node:
-            return
-        if node["type"] == "token":
-            terms.add(node["value"])
-        elif node["type"] == "phrase":
-            has_phrase = True
-            terms.update(node["values"])
-        else:
-            walk(node.get("left"))
-            walk(node.get("right"))
-
-    walk(ast)
-    return terms, has_phrase
-
-
-def _lazy_expr(ast) -> tuple["F.Column", bool]:
-    """The AST as (boolean Column over a ``mt`` matched-terms array,
-    is_complement flag) — the compiler's 8-case lazy-NOT De Morgan
-    algebra re-expressed over set membership instead of posting
-    frames: AND(+,-) -> l & ~r (left-anti), AND(-,-) -> l | r
-    flagged (De Morgan), OR(+,-) -> r & ~l flagged, OR(-,-) -> l & r
-    flagged. True negation (plain ``~``) never reaches the result:
-    complements stay lazy and the top level discards the flag, so a
-    surviving NOT yields its operand's matches — identical doc sets
-    to the compiled join/anti-join plans, quirk included."""
-    t = ast["type"]
-    if t == "token":
-        return F.array_contains("mt", ast["value"]), False
-    if t == "operator":
-        op = ast["operator"]
-        if op == "not":
-            e, neg = _lazy_expr(ast["right"])
-            return e, not neg
-        l_, ln = _lazy_expr(ast["left"])
-        r_, rn = _lazy_expr(ast["right"])
-        if op == "and":
-            if not ln and not rn:
-                return l_ & r_, False
-            if ln and not rn:
-                return r_ & ~l_, False
-            if not ln and rn:
-                return l_ & ~r_, False
-            return l_ | r_, True
-        # op == "or"
-        if not ln and not rn:
-            return l_ | r_, False
-        if ln and not rn:
-            return l_ & ~r_, True
-        if not ln and rn:
-            return r_ & ~l_, True
-        return l_ & r_, True
-    raise ValueError(f"unsupported AST node for presence eval: {t}")
-
-
-def _ast_presence_expr(ast) -> "F.Column":
-    """Match Column for a mixed tree, top-level flag discarded."""
-    return _lazy_expr(ast)[0]
 
 
 def compile_percolator(
@@ -140,68 +84,23 @@ def compile_percolator(
     for qid, qstr in queries.items():
         ast = parse_query(qstr, analyzer=analyzer)
         plan = classify_query(ast)
+        if ast is None:
+            raise ValueError(
+                f"query {qid!r} is not percolatable (degenerate)"
+            )
         if plan is None:
-            if ast is None:
-                raise ValueError(
-                    f"query {qid!r} is not percolatable (degenerate)"
-                )
-            terms, has_phrase = _ast_leaf_terms(ast)
-            if has_phrase or not terms:
-                raise ValueError(
-                    f"query {qid!r} is not percolatable (phrase inside "
-                    "a mixed-precedence tree); register the flattened/"
-                    "rewritten form"
-                )
-            _ast_presence_expr(ast)  # validate at registration time
-            mixed_plans.append((qid, ast, sorted(terms)))
-        elif plan[0] == "phrase":
+            raise ValueError(
+                f"query {qid!r} is not percolatable (phrase inside "
+                "a mixed-precedence tree); register the flattened/"
+                "rewritten form"
+            )
+        if plan[0] == "phrase":
             phrase_plans.append((qid, plan[1]))
+        elif plan[0] == "mixed":
+            mixed_plans.append((qid, plan[1], sorted(leaf_terms(plan[1]))))
         else:
             term_plans.append((qid, *plan))
     return term_plans, phrase_plans, mixed_plans
-
-
-def phrase_match(
-    toks: DataFrame, values: list[str], doc_id_col: str = "doc_id",
-    monotonic: bool = False,
-) -> DataFrame:
-    """Docs where the phrase terms occur in order within the reference
-    char-window SCAN — the SAME chained-pair predicate as the compiled
-    phrase plan (``plans/compiler.py:48-72``; ``dialect.ref_scan_window``
-    mirrors ``sea/posting_list.pyx:23-44`` including its blind spots on
-    multi-field non-monotonic position lists), evaluated over on-the-fly
-    token positions instead of decoded index postings
-    (``tokenize_postings`` emits the same field-concatenated layout).
-
-    Differential target for ``percolate``'s batched phrase arm (the
-    scalar per-phrase join chain vs the shared slot-tagged
-    aggregation) — kept uncalled in production, pinned by
-    ``test_percolate_batched_phrases_match_scalar_chain``.
-
-    ``monotonic`` mirrors the production arm's plan-time switch: True
-    for single-field batches (ascending position lists — the cheaper
-    any-pair form is equivalent there), False otherwise."""
-    from cs_search_engine_architecture_spark.functions.dialect import (
-        phrase_window,
-    )
-
-    cur = toks.where(F.col("term") == values[0]).select(
-        doc_id_col, "positions"
-    )
-    for term in values[1:]:
-        nxt = toks.where(F.col("term") == term).select(
-            doc_id_col, F.col("positions").alias("_p2")
-        )
-        window_ok = F.expr(
-            phrase_window("positions", "_p2", PHRASE_K, monotonic)
-        )
-        cur = (
-            cur.join(nxt, doc_id_col)
-            .where(window_ok)
-            .select(doc_id_col, F.col("_p2").alias("positions"))
-        )
-    # toks is unique per (doc, term), so the chain is one row per doc
-    return cur.select(doc_id_col)
 
 
 def percolate(
@@ -265,28 +164,16 @@ def percolate(
     # with many queries per distinct term, the join arm's map-side
     # partial aggregation beats per-doc array expression evaluation.
     # The join arm stays for ALL term-class registries.
-    join_term_plans = term_plans
-
-    if join_term_plans:
-        rows = []
-        for plan in join_term_plans:
-            qid, mode, terms = plan[0], plan[1], plan[2]
-            negs = plan[3] if len(plan) > 3 else []
-            msm = int(plan[4]) if len(plan) > 4 else 0
-            # presence semantics: multiplicity/boosts are scoring-side
-            # concepts and never affect WHICH docs match
-            pos_terms = set(terms)
-            required = len(pos_terms) if mode in ("and", "and_not") else msm
-            for t in pos_terms:
-                rows.append((qid, t, required, 0))
-            for t in set(negs):
-                rows.append((qid, t, required, 1))
+    if term_plans:
+        # presence semantics: the shared msearch term-plan rows and hit
+        # filter, with the weight column (multiplicity/boosts — scoring-
+        # side concepts) ignored: it never affects WHICH docs match.
+        # pres_toks is unique per (doc, term).
         qterms = spark.createDataFrame(
-            rows, "query_id string, term string, required int, is_neg int"
+            term_plan_rows(term_plans), TERM_PLAN_SCHEMA
         )
-        pres = pres_toks  # unique per (doc, term)
         agg = (
-            pres.join(F.broadcast(qterms), "term")
+            pres_toks.join(F.broadcast(qterms), "term")
             .groupBy("query_id", "doc_id")
             .agg(
                 F.sum(1 - F.col("is_neg")).alias("matched"),
@@ -294,14 +181,7 @@ def percolate(
                 F.max("is_neg").alias("neg_hit"),
             )
         )
-        # the msearch.batched_topk hit filter verbatim (>= not ==)
-        out = agg.where(
-            (
-                (F.col("required") == 0)
-                | (F.col("matched") >= F.col("required"))
-            )
-            & (F.col("neg_hit") == 0)
-        ).select("query_id", "doc_id")
+        out = agg.where(term_plan_hit()).select("query_id", "doc_id")
 
     if phrase_plans:
         # ALL phrases from ONE slot-tagged aggregation (the
@@ -340,10 +220,6 @@ def percolate(
             .join(F.broadcast(nmap), "query_id")
             .where(F.size("sl") == F.col("k"))
         )
-        from cs_search_engine_architecture_spark.operators.msearch import (
-            slot_chain_window_ok,
-        )
-
         m = agg.where(
             slot_chain_window_ok(PHRASE_K, monotonic=len(fields) == 1)
         ).select("query_id", "doc_id")
@@ -370,10 +246,16 @@ def percolate(
             .groupBy("doc_id")
             .agg(F.collect_set("term").alias("mt"))
         )
+
+        def member_leaf(term: str) -> tuple:
+            return F.array_contains("mt", term), F.lit(None)
+
         fired = F.array_compact(
             F.array(
                 *[
-                    F.when(_ast_presence_expr(ast), F.lit(qid))
+                    F.when(
+                        _mixed_scored_exprs(ast, member_leaf)[0], F.lit(qid)
+                    )
                     for qid, ast, _ in mixed_plans
                 ]
             )

@@ -289,7 +289,7 @@ class OracleIndex:
         """BM25 boolean search -> [(doc_id, score)] with the contract
         tie-break (score desc, doc_id asc). The top-level NOT flag is
         discarded, as in ``sea/engine.pyx:531-553``."""
-        ast = parse_query(query)
+        ast = parse_query(query, analyzer=self.analyzer)
         if ast is None:
             return []
         postings, _ = self._eval(ast)

@@ -131,3 +131,16 @@ def test_unknown_term_and_degenerate(idx):
     assert idx.search_all('""') == []
     assert {d for d, _ in idx.search_all("alpha and nonexistentterm")} == set()
     assert {d for d, _ in idx.search_all("alpha or nonexistentterm")} == {0, 2}
+
+
+def test_search_parses_with_the_index_analyzer():
+    """``search`` parses the query with the analyzer the index was built
+    with: under "simple", "by" is a content term (the reference analyzer
+    drops it as a stopword), so the 3-term phrase must not match a doc
+    without "by" and the bare term must find the doc that has it."""
+    idx = OracleIndex(
+        [(0, ["window order by key"]), (1, ["window order data"])],
+        analyzer="simple",
+    )
+    assert [d for d, _ in idx.search_all('"window order by"')] == [0]
+    assert [d for d, _ in idx.search_all("by")] == [0]

@@ -16,13 +16,7 @@ import pytest
 
 from cs_search_engine_architecture_spark.engine import SearchEngine
 from cs_search_engine_architecture_spark.operators import indexer
-from cs_search_engine_architecture_spark.operators.percolate import (
-    percolate,
-    phrase_match,
-)
-from cs_search_engine_architecture_spark.operators.indexer import (
-    tokenize_postings,
-)
+from cs_search_engine_architecture_spark.operators.percolate import percolate
 from cs_search_engine_architecture_spark.oracle.reference import OracleIndex
 from cs_search_engine_architecture_spark.plans.compiler import QueryCompiler
 from cs_search_engine_architecture_spark.plans.query_parser import parse_query
@@ -168,7 +162,7 @@ def test_percolate_multi_field_keeps_scan_blind_spots(spark):
 
 
 def test_percolate_phrase_arm_switch_equivalence(spark, single_field_setup):
-    _, _, _, corpus = single_field_setup
+    _, _, oracle, corpus = single_field_setup
     qs = {f"p{i}": q for i, q in enumerate(_phrase_queries()[:10])}
     got: dict[str, list[int]] = {}
     for r in percolate(spark, qs, corpus).collect():
@@ -177,14 +171,10 @@ def test_percolate_phrase_arm_switch_equivalence(spark, single_field_setup):
         classify_query,
     )
 
-    toks = tokenize_postings(corpus, ["text"], "doc_id", "reference")
     for qid, q in qs.items():
         plan = classify_query(parse_query(q))
         assert plan is not None and plan[0] == "phrase", q
-        values = plan[1]
-        # scalar forced-SCAN chain — the any-pair batched arm must agree
-        want = sorted(
-            r["doc_id"]
-            for r in phrase_match(toks, values, monotonic=False).collect()
-        )
+        # the oracle's two-cursor SCAN chain — the any-pair batched arm
+        # must agree
+        want = sorted(d for d, _ in oracle.search_all(q))
         assert sorted(got.get(qid, [])) == want, q

@@ -117,6 +117,7 @@ def test_classify_query_strips_top_not():
     """"not X" must classify (and so batch/percolate) exactly as X."""
     from cs_search_engine_architecture_spark.operators.msearch import (
         classify_query,
+        leaf_terms,
     )
     from cs_search_engine_architecture_spark.plans.query_parser import (
         parse_query,
@@ -131,5 +132,49 @@ def test_classify_query_strips_top_not():
         "phrase",
         ["spark", "data"],
     )
-    # a NOT below the root still disqualifies flat classification
-    assert classify_query(parse_query("spark or not data")) is None
+    # a NOT below the root still disqualifies flat classification: the
+    # term-only tree is "mixed" (the lazy-NOT Column algebra)
+    assert classify_query(parse_query("spark or not data")) == (
+        "mixed",
+        parse_query("spark or not data"),
+    )
+
+    # the whole shape table search / msearch / percolate dispatch on
+    q = parse_query
+    table = [
+        ("spark", ("or", ["spark"])),
+        ("not not spark", ("or", ["spark"])),
+        ("spark or data or slow", ("or", ["spark", "data", "slow"])),
+        ("spark or spark", ("or", ["spark", "spark"])),
+        ("spark and data", ("and", ["spark", "data"])),
+        (
+            "data and not (slow or fast)",
+            ("and_not", ["data"], ["slow", "fast"]),
+        ),
+        (
+            "data and not (slow and fast)",
+            ("mixed", q("data and not (slow and fast)")),
+        ),
+        (
+            "not (spark and (data or slow))",
+            ("mixed", q("spark and (data or slow)")),
+        ),
+        ('"spark data"', ("phrase", ["spark", "data"])),
+        ('spark or "window order"', None),
+        ("", None),
+        ("and or", None),
+    ]
+    for query, want in table:
+        assert classify_query(q(query)) == want, query
+    # leaf_terms: first-seen order, unique, phrase members included
+    assert leaf_terms(q('slow and "window order" or slow')) == [
+        "slow",
+        "window",
+        "order",
+    ]
+    assert leaf_terms(q("data and not (slow or fast or data)")) == [
+        "data",
+        "slow",
+        "fast",
+    ]
+    assert leaf_terms(q("")) == []

@@ -814,34 +814,31 @@ def test_engine_percolate_matches_full_search(spark, engine, docs):
 
 
 def test_percolate_batched_phrases_match_scalar_chain(spark):
-    """The shared slot-tagged phrase aggregation == the scalar
-    per-phrase join chain (``phrase_match``, the compiled plan's
-    shape) for every registered phrase at once — repeated-term
-    phrases (same-occurrence quirk, q−p=0 passes) and 3-term chains
-    included."""
-    from cs_search_engine_architecture_spark.operators.indexer import (
-        tokenize_postings,
-    )
+    """The shared slot-tagged phrase aggregation == the oracle's scalar
+    per-phrase chain (``OracleIndex``, the reference posting algebra,
+    parsed with the same analyzer) for every registered phrase at once
+    — repeated-term phrases (same-occurrence quirk, q−p=0 passes) and
+    3-term chains included."""
     from cs_search_engine_architecture_spark.operators.percolate import (
         percolate,
-        phrase_match,
+    )
+    from cs_search_engine_architecture_spark.oracle.reference import (
+        OracleIndex,
     )
     from cs_search_engine_architecture_spark.plans.query_parser import (
         parse_query,
     )
 
-    batch = spark.createDataFrame(
-        [
-            (0, "window order by key"),
-            (1, "order window data data"),
-            (2, "window groups then order appears far too late to fit"),
-            (3, "data data everywhere"),
-            (4, "window order window order"),
-            (5, "no relevant trigrams here"),
-            (6, "just one data token"),
-        ],
-        "doc_id long, text string",
-    )
+    rows = [
+        (0, "window order by key"),
+        (1, "order window data data"),
+        (2, "window groups then order appears far too late to fit"),
+        (3, "data data everywhere"),
+        (4, "window order window order"),
+        (5, "no relevant trigrams here"),
+        (6, "just one data token"),
+    ]
+    batch = spark.createDataFrame(rows, "doc_id long, text string")
     phrases = {
         "f1": '"window order"',
         "f2": '"data data"',  # repeated term: same-occurrence quirk
@@ -852,14 +849,11 @@ def test_percolate_batched_phrases_match_scalar_chain(spark):
     for r in percolate(spark, phrases, batch, analyzer="simple").collect():
         got.setdefault(r["query_id"], set()).add(r["doc_id"])
 
-    toks = tokenize_postings(batch, ["text"], "doc_id", "simple")
+    oracle = OracleIndex([(d, [t]) for d, t in rows], analyzer="simple")
     for qid, qstr in phrases.items():
         ast = parse_query(qstr, analyzer="simple")
         assert ast["type"] == "phrase"
-        want = {
-            r["doc_id"]
-            for r in phrase_match(toks, list(ast["values"])).collect()
-        }
+        want = {d for d, _ in oracle.search_all(qstr)}
         assert got.get(qid, set()) == want, (qid, qstr)
     # the quirk is load-bearing in this fixture: "data data" fires on
     # doc 6's SINGLE 'data' occurrence too (q-p=0 passes)
