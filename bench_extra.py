@@ -8,7 +8,7 @@ OPTIMIZATION_r06.md only.
 
 Usage:
   SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py \
-      --only dedup_spans,percolate_200q [--reps 2] [--plan-dir plans/r06]
+      --only dedup_spans,percolate_200q [--reps 2]
 """
 
 from __future__ import annotations
@@ -24,17 +24,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from cs_search_engine_architecture_spark.session import get_spark  # noqa: E402
 
 
-def _explain(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--only", default="")
     ap.add_argument("--reps", type=int, default=2)
-    ap.add_argument("--plan-dir", default="")
     args = ap.parse_args()
     only = set(args.only.split(",")) if args.only else None
 

@@ -246,12 +246,12 @@ class SearchEngine:
             over_cap = t_count + u_count > self._TOMB_FASTPATH_CAP
             k_fetch = top_k + t_count + u_count
         route, terms = self._route(ast, over_cap)
-        span = self.meta.get("wand_shard_span")
-        arm_tag = "+delta_arm" if self.has_delta else ""
         if route == "single_term_blockmax":
             strategy = route + ("+update_arm" if upd else "")
         elif route in ("wand_or", "wand_and"):
-            strategy = route + ("_sharded" if span else "") + arm_tag
+            strategy = (
+                route + "_sharded" + ("+delta_arm" if self.has_delta else "")
+            )
         else:
             strategy = "join_masked_update_arm" if upd else route
         self.last_strategy = strategy
@@ -282,26 +282,16 @@ class SearchEngine:
             # unions in and the union re-limits. WAND routing therefore
             # survives adds AND pending in-place updates; merge/compact
             # only shrink the arm.
-            from cs_search_engine_architecture_spark.operators import wand
+            from cs_search_engine_architecture_spark.operators.wand import (
+                wand_topk,
+            )
 
-            if span:
-                # shard-aligned indexes serve from the cached
-                # pre-sharded layout with NO per-query exchange
-                kernel = (
-                    wand.wand_or_topk_sharded if route == "wand_or"
-                    else wand.wand_and_topk_sharded
-                )
-                raw = kernel(self._wand_sharded(), terms, k_fetch, span)
-            else:
-                kernel = (
-                    wand.wand_or_topk if route == "wand_or"
-                    else wand.wand_and_topk
-                )
-                raw = kernel(
-                    self.spark,
-                    self._base_blocks_df() if self.has_delta else self.blocks,
-                    self.num_buckets, terms, k_fetch,
-                )
+            # served from the cached pre-sharded layout with NO
+            # per-query exchange
+            raw = wand_topk(
+                self._wand_sharded(), route.removeprefix("wand_"), terms,
+                k_fetch, self.meta["wand_shard_span"],
+            )
             if not self.has_delta:
                 return _finish(raw)
             out = self._mask(raw).unionByName(self._delta_arm(ast))
@@ -318,22 +308,24 @@ class SearchEngine:
         / AND of DISTINCT terms at >= 1M postings -> WAND (AND only when
         a selective term exists); everything else -> the compiled join
         plan ("join_masked" when the tombstone/update mask exceeds the
-        fast-path cap)."""
+        fast-path cap). WAND needs the shard-aligned block layout: a
+        legacy meta without ``wand_shard_span`` routes to the join."""
         if over_cap:
             return "join_masked", []
         shape = classify_query(ast)
         kind, terms = (shape[0], shape[1]) if shape else (None, [])
         if kind == "or" and len(terms) == 1:
             return "single_term_blockmax", terms
-        # WAND pays 2 extra driver round-trips; below ~1M postings the
-        # join path's single job is cheaper (same scale gate as the
-        # single-term block-max path — at cluster scale WAND always
-        # wins). Duplicate terms double-count in the summed score; the
-        # join path reproduces that reference quirk, so they stay there.
+        # below ~1M postings the join path's single job is cheaper than
+        # WAND's (same scale gate as the single-term block-max path — at
+        # cluster scale WAND always wins). Duplicate terms double-count
+        # in the summed score; the join path reproduces that reference
+        # quirk, so they stay there.
         if (
             kind not in ("or", "and")
             or len(set(terms)) != len(terms)
             or self.meta.get("num_postings", 0) < 1_000_000
+            or not self.meta.get("wand_shard_span")
         ):
             return "join", []
         if kind == "or":

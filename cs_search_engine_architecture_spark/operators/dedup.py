@@ -18,9 +18,12 @@ no dedup). Shapes chosen for 100 TB operation:
 * **n-gram Jaccard** — verification stage over LSH candidates only
   (never all pairs): candidates × shingle-set intersection/union.
 * **embedding cosine** — ``embedding_dup_pairs_bucketed``: banded
-  random-hyperplane LSH candidates (same fragments as
-  ``similarity.py``) → exact-cosine verify; the cross-join variant is
-  the test-only exactness baseline.
+  random-hyperplane LSH buckets (same fragments as ``similarity.py``)
+  → per-bucket pair generation and exact-cosine verify fused in one
+  numpy kernel; ``embedding_lsh_candidates`` exposes the candidate
+  pairs alone (for recall measurement), and the cross-join
+  ``embedding_dup_pairs`` is the test-only exactness baseline. A
+  zero-norm vector pairs with nothing in either.
 
 Everything is built from ``functions.dialect`` fragments so the DuckDB
 oracles in ``gate.py`` are bit-identical; Spark expressions are
@@ -608,14 +611,6 @@ EMB_PLANES_PER_BAND = 4
 EMB_DIMS = 64
 
 
-def _emb_with_norm(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.expr(D.l2_norm(D.SPARK, vec_col)).alias("nrm"),
-    )
-
-
 def _distinct_shingles(df: DataFrame, text_col: str) -> DataFrame:
     return (
         widen_input(df)
@@ -728,41 +723,6 @@ def ngram_containment_pairs(
     )
 
 
-def embedding_cosine_verify(
-    candidates: DataFrame,
-    emb: DataFrame,
-    min_cosine: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact-cosine verify stage over (id_a, id_b) candidate pairs —
-    the embedding analog of ``ngram_jaccard_pairs``' verification: at
-    100 TB only candidates are scored, never the cross product. Cosine
-    is the shared double-precision left fold, float32-cast (gate
-    policy)."""
-    withn = _emb_with_norm(emb, id_col, vec_col)
-    a = withn.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    b = withn.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    cos = (
-        F.expr(D.dot_product(D.SPARK, "va", "vb"))
-        / (F.col("na") * F.col("nb"))
-    )
-    return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            cos.cast("float").cast("double").alias("cos"),
-        )
-        .where(F.col("cos") >= min_cosine)
-    )
-
-
 def embedding_lsh_candidates(
     emb: DataFrame,
     num_bands: int = EMB_NUM_BANDS,
@@ -840,7 +800,6 @@ def embedding_dup_pairs_bucketed(
     dims: int = EMB_DIMS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, cos) near-dup pairs, LSH-bucketed candidates →
     exact-cosine verify. THE scale path: candidate generation is
@@ -848,30 +807,24 @@ def embedding_dup_pairs_bucketed(
     candidates only — the same two-stage shape as MinHash-LSH →
     Jaccard for text.
 
-    ``kernel=True`` (default, r6): the per-bucket pair generation +
-    first-colliding-band dedup + exact-cosine verify run fused inside
-    ONE ``applyInPandas`` numpy kernel per (band, bucket) group. The
-    quadratic candidate stream — tens of millions of pairs from an
-    80k-row band frame — never exists as JVM rows: only the ~80k
-    grouped input rows cross Arrow, and only the passing pairs come
-    back. The cosine is the SAME strict left fold as
+    The per-bucket pair generation + first-colliding-band dedup +
+    exact-cosine verify run fused inside ONE ``applyInPandas`` numpy
+    kernel per (band, bucket) group. The quadratic candidate stream —
+    tens of millions of pairs from an 80k-row band frame — never
+    exists as JVM rows: only the ~80k grouped input rows cross Arrow,
+    and only the passing pairs come back. The cosine is the SAME strict left fold as
     ``dialect.dot_product`` (a ``for d: acc += A[:,d]*B[:,d]`` loop
     over a 0.0-seeded accumulator is that fold, vectorized across
     pairs; norms fold the same way), float32-cast like the gate — the
     DuckDB oracle matches bit-for-bit (checked by the
-    ``dedup_embedding_pairs`` gate). ``kernel=False`` keeps the
-    join-based candidates → verify composition (the plan-shape
-    reference, and the path for exotic id types).
+    ``dedup_embedding_pairs`` gate). A zero-norm vector pairs with
+    nothing (its cosine is 0/0 = NaN, which fails the threshold), the
+    same contract as ``embedding_dup_pairs``.
 
-    Measured (r6, sf1.0 = 20k × 64-dim, local[32]): join+HOF-verify
-    54s → kernel ~4s; the HOF dot is interpreted per pair, the kernel
-    is memory-bandwidth-bound numpy."""
-    if not kernel:
-        cand = embedding_lsh_candidates(
-            emb, num_bands, planes_per_band, dims, id_col, vec_col
-        )
-        return embedding_cosine_verify(cand, emb, min_cosine, id_col, vec_col)
-
+    Measured (r6, sf1.0 = 20k × 64-dim, local[32]): a join-composed
+    candidates → higher-order-function verify took 54s, this kernel
+    ~4s; the HOF dot is interpreted per pair, the kernel is
+    memory-bandwidth-bound numpy."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -1010,8 +963,17 @@ def embedding_dup_pairs(
     """(id_a, id_b, cos) pairs with cosine ≥ threshold via an exhaustive
     cross join. TEST/SMALL-INPUT ONLY — the O(n²) exactness baseline for
     measuring ``embedding_dup_pairs_bucketed``'s recall; every
-    production path uses the bucketed variant."""
-    withn = _emb_with_norm(emb, id_col, vec_col)
+    production path uses the bucketed variant. Cosine is the shared
+    double-precision left fold, float32-cast (gate policy).
+
+    A zero-norm vector pairs with nothing: its cosine is undefined, so
+    it is dropped before the cross join (under ANSI SQL the division
+    would otherwise raise DIVIDE_BY_ZERO)."""
+    withn = emb.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        F.expr(D.l2_norm(D.SPARK, vec_col)).alias("nrm"),
+    ).where(F.col("nrm") > 0)
     a = withn.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     )

@@ -102,7 +102,8 @@ DEFAULT_HOT_DF = 1 << 13  # salt terms with more postings than this
 # partitioned cached frame with NO per-query exchange (wand.py). Cost:
 # sparse terms split into more, smaller blocks — bounded by one extra
 # block per (term, overlapped shard); metadata stays O(num_postings /
-# min(block_size, postings-per-term-per-shard)). None disables.
+# min(block_size, postings-per-term-per-shard)). Every build writes this
+# layout; the span must be a positive int.
 DEFAULT_WAND_SHARD_SPAN = 1 << 14
 
 # reference BM25 constants (sea/indexer.pyx:22-24)
@@ -470,9 +471,7 @@ BLOCKS_ID_SCHEMA = (
 )
 
 
-def _make_block_encoder_id(
-    block_size: int, num_fields: int, shard_span: int | None = None
-):
+def _make_block_encoder_id(block_size: int, num_fields: int, shard_span: int):
     """Block encoder keyed by dense ``term_id`` (long) instead of the
     term string: the build's one wide shuffle and its Arrow->pandas
     crossing carry NO per-posting Python strings (25M postings would
@@ -506,23 +505,19 @@ def _make_block_encoder_id(
         nf = num_fields
 
         base_block = int(pdf["doc_group"].iloc[0]) << 32
-        if shard_span:
-            # never let a block cross a doc-shard boundary: blocks are
-            # split at shard edges, so shard(first_doc) == shard(last_doc)
-            # and the WAND layout needs no block replication
-            sh = (doc_ids // np.uint64(shard_span)).astype(np.int64)
-            run_starts = np.concatenate(
-                [[0], np.flatnonzero(sh[1:] != sh[:-1]) + 1]
-            )
-            starts, ends = [], []
-            for i, rs in enumerate(run_starts):
-                run_end = int(run_starts[i + 1]) if i + 1 < len(run_starts) else n
-                for s0 in range(int(rs), run_end, block_size):
-                    starts.append(s0)
-                    ends.append(min(s0 + block_size, run_end))
-        else:
-            starts = list(range(0, n, block_size))
-            ends = [min(s0 + block_size, n) for s0 in starts]
+        # never let a block cross a doc-shard boundary: blocks are split
+        # at shard edges, so shard(first_doc) == shard(last_doc) and the
+        # WAND layout needs no block replication
+        sh = (doc_ids // np.uint64(shard_span)).astype(np.int64)
+        run_starts = np.concatenate(
+            [[0], np.flatnonzero(sh[1:] != sh[:-1]) + 1]
+        )
+        starts, ends = [], []
+        for i, rs in enumerate(run_starts):
+            run_end = int(run_starts[i + 1]) if i + 1 < len(run_starts) else n
+            for s0 in range(int(rs), run_end, block_size):
+                starts.append(s0)
+                ends.append(min(s0 + block_size, run_end))
         nb = len(starts)
         col_first, col_last, col_count, col_max, col_min = [], [], [], [], []
         col_docs, col_scores, col_freqs, col_lens = [], [], [], []
@@ -592,6 +587,20 @@ def _count_checking_ids(corpus: DataFrame, id_col: str, group_span) -> int:
     return int(row["n"])
 
 
+def _check_shard_span(shard_span) -> None:
+    """Every index is shard-aligned: reject a span that is not a
+    positive int up front, before any Spark job (it would otherwise
+    die as a ``TypeError`` inside an encode task)."""
+    if (
+        not isinstance(shard_span, int)
+        or isinstance(shard_span, bool)
+        or shard_span < 1
+    ):
+        raise ValueError(
+            f"shard_span must be a positive int (got {shard_span!r})"
+        )
+
+
 def build_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -607,7 +616,7 @@ def build_index(
     bs: Sequence[float] | None = None,
     k: float = REF_K,
     corpus_path: str | None = None,
-    shard_span: int | None = DEFAULT_WAND_SHARD_SPAN,
+    shard_span: int = DEFAULT_WAND_SHARD_SPAN,
 ) -> dict:
     """Build the full index at ``out_path``; returns the meta dict.
 
@@ -618,6 +627,7 @@ def build_index(
     cache pressure alone. Columnar-compressed disk staging keeps the
     build's memory footprint flat regardless of corpus size (the SPIMI
     discipline: bounded RAM, spill runs, merge from disk)."""
+    _check_shard_span(shard_span)
     t0 = time.time()
     phases: dict[str, float] = {}
     # narrow single-file corpora (one parquet row group) cap the whole
@@ -667,7 +677,7 @@ def _write_blocks(
     num_buckets: int,
     group_span: int,
     hot_df: int,
-    shard_span: int | None,
+    shard_span: int,
     encode_parts: int | None,
     sink_parts: int,
     doc_lens_parts: int,
@@ -780,7 +790,7 @@ def _finalize_index(
     corpus_path: str | None,
     t0: float,
     extra_meta: dict | None = None,
-    shard_span: int | None = DEFAULT_WAND_SHARD_SPAN,
+    shard_span: int = DEFAULT_WAND_SHARD_SPAN,
     phases: dict[str, float] | None = None,
 ) -> dict:
     """Stats + score + block-encode + sink from a postings frame
@@ -936,7 +946,7 @@ def build_index_resumable(
     bs: Sequence[float] | None = None,
     k: float = REF_K,
     corpus_path: str | None = None,
-    shard_span: int | None = DEFAULT_WAND_SHARD_SPAN,
+    shard_span: int = DEFAULT_WAND_SHARD_SPAN,
 ) -> dict | None:
     """Checkpoint-resumable build (north rule; the distributed analog of
     the reference's byte-offset resume, ``sea/corpus.pyx:224-227``).
@@ -960,6 +970,7 @@ def build_index_resumable(
     returns None (used by tests to simulate a crash; a production
     driver-retry loop just calls this function again).
     """
+    _check_shard_span(shard_span)
     work = os.path.join(out_path, "work")
     ckpt_dir = os.path.join(work, "checkpoints")
     os.makedirs(ckpt_dir, exist_ok=True)
@@ -1285,11 +1296,9 @@ def compact_index(
         corpus_path=meta.get("corpus_path"),
         group_span=meta.get("group_span", DEFAULT_GROUP_TARGET),
         hot_df=meta.get("hot_df", DEFAULT_HOT_DF),
+        # a legacy meta (no span) gets the shard-aligned layout
+        shard_span=meta.get("wand_shard_span") or DEFAULT_WAND_SHARD_SPAN,
     )
-    # shard_span=None is a deliberate layout choice (WAND disabled) —
-    # only fall back to the default when the key predates the feature
-    if "wand_shard_span" in meta:
-        kwargs["shard_span"] = meta["wand_shard_span"]
     if meta.get("field_boosts"):
         kwargs["boosts"] = meta["field_boosts"]
     if meta.get("bm25_bs"):
@@ -1538,7 +1547,7 @@ def add_docs(
         block_size=meta.get("block_size", DEFAULT_BLOCK_SIZE),
         num_buckets=num_buckets, group_span=group_span,
         hot_df=meta.get("hot_df", DEFAULT_HOT_DF),
-        shard_span=meta.get("wand_shard_span"),
+        shard_span=meta.get("wand_shard_span") or DEFAULT_WAND_SHARD_SPAN,
         # a delta is small: AQE sizes its encode shuffle, and it writes
         # fewer files than the base
         encode_parts=None, sink_parts=max(1, num_buckets // 8),

@@ -9,14 +9,17 @@ flat scored search: per-doc total = Σ per-term BM25, ``merge_postings``
 
 Shape:
 
-1. one bucket+term-pruned scan collects the query terms' BLOCK rows
-   (metadata + compressed payloads; one row per 128 postings — postings
-   stay encoded);
-2. blocks are assigned to doc-range shards (``doc_id // span``; a block
-   overlaps ≤ 2 shards since blocks are doc-contiguous) — every doc's
-   postings land in exactly ONE shard, so shard-local top-ks are
-   globally mergeable;
-3. ``applyInPandas`` per shard runs the numpy WAND kernel below;
+1. a term-pruned scan of the cached shard-partitioned blocks frame
+   (``preshard_blocks``) selects the query terms' BLOCK rows (metadata
+   + compressed payloads; one row per ``block_size`` postings —
+   postings stay encoded);
+2. the build splits every block at ``wand_shard_span`` edges, so a
+   block lies in exactly ONE doc-range shard (``first_doc // span``)
+   — every doc's postings land in exactly one shard, so shard-local
+   top-ks are globally mergeable, and no block is replicated;
+3. ``applyInPandas`` per shard runs the numpy WAND kernel below, with
+   no per-query exchange (the cached frame is already partitioned by
+   shard);
 4. ``orderBy(score desc, doc_id asc).limit(k)`` merges shard-local
    top-ks (TakeOrderedAndProject — only ≤ k rows per shard move).
 
@@ -47,7 +50,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cs_search_engine_architecture_spark.operators.compression import (
@@ -55,7 +58,6 @@ from cs_search_engine_architecture_spark.operators.compression import (
     varint_decode,
 )
 
-DEFAULT_SHARD_SPAN = 1 << 14
 RESULT_SCHEMA = "doc_id long, score double"
 
 
@@ -263,88 +265,14 @@ def shard_and_topk(
     return pd.DataFrame({"doc_id": inter[sel], "score": total[sel]})
 
 
-_MAX_FALLBACK_SHARDS = 4096
-
-
-def _fallback_span(sel: DataFrame, shard_span: int) -> int:
-    """Effective shard span for the explode-based variants (indexes
-    built WITHOUT the shard-aligned layout, where a block's doc range
-    is unbounded): a sparse term's block can overlap arbitrarily many
-    fixed-span shards, so ``sequence(first/span, last/span)`` would fan
-    one block row out to (range/span + 1) copies — a shuffle blowup at
-    web scale and a 'Too long sequence' failure on wide id spaces. Grow
-    the span until the observed doc-id range fits ~_MAX_FALLBACK_SHARDS
-    shards (one cheap metadata-column agg; the aligned ``*_sharded``
-    serving paths never take it)."""
-    b = sel.agg(
-        F.min("first_doc").alias("lo"), F.max("last_doc").alias("hi")
-    ).collect()[0]
-    if b["hi"] is None:
-        return int(shard_span)
-    need = (
-        int(b["hi"]) - int(b["lo"]) + _MAX_FALLBACK_SHARDS
-    ) // _MAX_FALLBACK_SHARDS
-    return max(int(shard_span), need)
-
-
-def wand_and_topk(
-    spark: SparkSession,
-    blocks: DataFrame,
-    num_buckets: int,
-    terms: list[str],
-    k: int,
-    shard_span: int = DEFAULT_SHARD_SPAN,
-) -> DataFrame:
-    """Exact top-k of the AND-intersection score over ``terms``."""
-    buckets = term_buckets(spark, terms, num_buckets)
-    sel = blocks.where(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(list(terms))
-    ).select(
-        "term", "first_doc", "last_doc", "doc_ids_bin", "scores_bin"
-    )
-    shard_span = _fallback_span(sel, shard_span)
-    sharded = sel.withColumn(
-        "shard",
-        F.explode(
-            F.sequence(
-                F.expr(f"first_doc div {shard_span}"),
-                F.expr(f"last_doc div {shard_span}"),
-            )
-        ),
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        return shard_and_topk(
-            pdf, list(terms), k, lo=shard * shard_span,
-            hi=(shard + 1) * shard_span,
-        )
-
-    local = sharded.groupBy("shard").applyInPandas(kernel, RESULT_SCHEMA)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def term_buckets(spark: SparkSession, terms: list[str], num_buckets: int) -> list[int]:
-    rows = (
-        spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(
-            F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int").alias("b")
-        )
-        .collect()
-    )
-    return sorted({r["b"] for r in rows})
-
-
-# ---------------------------------------------------- pre-sharded layout
+# ------------------------------------------------------ serving layout
 #
-# When the index was built with a ``wand_shard_span`` (blocks never
-# cross a doc-shard boundary), the engine keeps ONE cached copy of the
-# blocks repartitioned by ``shard`` (one build-time exchange). Every
-# WAND query then runs filter -> sort -> kernel over the cached
+# Every index is shard-aligned (blocks never cross a ``wand_shard_span``
+# boundary), so the engine keeps ONE cached copy of the blocks
+# repartitioned by ``shard`` (one exchange at first use). Every WAND
+# query then runs filter -> sort -> kernel over the cached
 # partitioning — NO per-query ShuffleExchange, so a hot term's
-# compressed payload never re-ships per query (the round-1 scale flag).
-# At cluster scale this cached frame is the serving layout; the
-# explode-based variants below remain for indexes without the layout.
+# compressed payload never re-ships per query.
 
 
 def preshard_blocks(
@@ -359,81 +287,30 @@ def preshard_blocks(
     ).repartition(num_partitions, "shard")
 
 
-def wand_or_topk_sharded(
-    sharded: DataFrame, terms: list[str], k: int, shard_span: int
+def wand_topk(
+    sharded: DataFrame, kind: str, terms: list[str], k: int, shard_span: int
 ) -> DataFrame:
-    """Exact OR-sum top-k over a pre-sharded cached blocks frame —
-    exchange-free: the persisted HashPartitioning(shard) satisfies the
-    kernel's ClusteredDistribution, so the plan is
-    InMemoryTableScan -> Filter -> Sort -> FlatMapGroupsInPandas."""
-    sel = sharded.where(F.col("term").isin(list(terms))).select(
-        "term", "first_doc", "last_doc", "count", "max_score", "min_score",
-        "doc_ids_bin", "scores_bin", "shard",
+    """Exact top-k over a pre-sharded cached blocks frame: ``kind``
+    "or" ranks the OR-sum (``shard_wand_topk``), "and" the
+    intersection (``shard_and_topk``). Exchange-free: the persisted
+    HashPartitioning(shard) satisfies the kernel's
+    ClusteredDistribution, so the plan is InMemoryTableScan -> Filter
+    -> Sort -> FlatMapGroupsInPandas, then a TakeOrderedAndProject
+    merge of the shard-local top-ks."""
+    terms = list(terms)
+    # the AND kernel skips on doc ranges alone — no score bounds needed
+    bounds = ["count", "max_score", "min_score"] if kind == "or" else []
+    sel = sharded.where(F.col("term").isin(terms)).select(
+        "term", "first_doc", "last_doc", *bounds, "doc_ids_bin",
+        "scores_bin", "shard",
     )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(pdf["shard"].iloc[0])
-        return shard_wand_topk(
-            pdf, k, lo=shard * shard_span, hi=(shard + 1) * shard_span
-        )
+        lo, hi = shard * shard_span, (shard + 1) * shard_span
+        if kind == "or":
+            return shard_wand_topk(pdf, k, lo=lo, hi=hi)
+        return shard_and_topk(pdf, terms, k, lo=lo, hi=hi)
 
     local = sel.groupBy("shard").applyInPandas(kernel, RESULT_SCHEMA)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def wand_and_topk_sharded(
-    sharded: DataFrame, terms: list[str], k: int, shard_span: int
-) -> DataFrame:
-    """Exact AND-intersection top-k over a pre-sharded cached frame
-    (see ``wand_or_topk_sharded``)."""
-    sel = sharded.where(F.col("term").isin(list(terms))).select(
-        "term", "first_doc", "last_doc", "doc_ids_bin", "scores_bin",
-        "shard",
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        return shard_and_topk(
-            pdf, list(terms), k, lo=shard * shard_span,
-            hi=(shard + 1) * shard_span,
-        )
-
-    local = sel.groupBy("shard").applyInPandas(kernel, RESULT_SCHEMA)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def wand_or_topk(
-    spark: SparkSession,
-    blocks: DataFrame,
-    num_buckets: int,
-    terms: list[str],
-    k: int,
-    shard_span: int = DEFAULT_SHARD_SPAN,
-) -> DataFrame:
-    """Exact top-k of the OR-sum score over ``terms``."""
-    buckets = term_buckets(spark, terms, num_buckets)
-    sel = blocks.where(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(list(terms))
-    ).select(
-        "term", "first_doc", "last_doc", "count", "max_score", "min_score",
-        "doc_ids_bin", "scores_bin",
-    )
-    shard_span = _fallback_span(sel, shard_span)
-    sharded = sel.withColumn(
-        "shard",
-        F.explode(
-            F.sequence(
-                F.expr(f"first_doc div {shard_span}"),
-                F.expr(f"last_doc div {shard_span}"),
-            )
-        ),
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        return shard_wand_topk(
-            pdf, k, lo=shard * shard_span, hi=(shard + 1) * shard_span
-        )
-
-    local = sharded.groupBy("shard").applyInPandas(kernel, RESULT_SCHEMA)
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

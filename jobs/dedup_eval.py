@@ -181,25 +181,7 @@ def main() -> None:
     )
     if emb is not None:
         cths = sorted(float(t) for t in args.cosine_thresholds.split(","))
-        we = dedup._emb_with_norm(emb, "vec_id", "embedding")
-        ea = we.select(
-            F.col("id").alias("id_a"), F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-        )
-        eb = we.select(
-            F.col("id").alias("id_b"), F.col("v").alias("vb"),
-            F.col("nrm").alias("nb"),
-        )
-        cos = (
-            F.expr(D.dot_product(D.SPARK, "va", "vb"))
-            / (F.col("na") * F.col("nb"))
-        )
-        etruth = (
-            ea.join(eb, F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", cos.alias("cos"))
-            .where(F.col("cos") >= min(cths))
-            .cache()
-        )
+        etruth = dedup.embedding_dup_pairs(emb, min_cosine=min(cths)).cache()
         etruth_counts = {
             t: etruth.where(F.col("cos") >= t).count() for t in cths
         }

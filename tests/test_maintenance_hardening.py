@@ -1,9 +1,10 @@
 """Round-5 hardening of the maintenance/build protocols: delta-segment
 slot allocation can never overwrite an existing segment, compaction
 carries the full block-layout config, resumable builds refuse a
-num_slices mismatch and survive empty corpora, the doc-id domain is
-validated with a clear error, and add_docs' duplicate check sees
-zero-posting docs."""
+num_slices mismatch and survive empty corpora, the doc-id domain and
+the WAND shard span are validated with a clear error, a legacy meta
+without a span serves through the join, and add_docs' duplicate check
+sees zero-posting docs."""
 
 from __future__ import annotations
 
@@ -77,18 +78,75 @@ def test_add_docs_slot_skips_live_ingest_namespace(spark, tmp_path):
 
 def test_compact_preserves_block_layout_config(spark, tmp_path):
     """compact_index defaults every build parameter to the OLD meta —
-    including the layout knobs (wand_shard_span/group_span/hot_df),
-    where shard_span=None is a deliberate choice that must not silently
-    revert to the default span."""
-    out = _build(spark, tmp_path, shard_span=None, hot_df=1 << 10)
+    including the layout knobs (wand_shard_span/group_span/hot_df): a
+    non-default span must not silently revert to the default."""
+    out = _build(spark, tmp_path, shard_span=64, hot_df=1 << 10)
     meta = indexer.load_meta(out)
-    assert meta["wand_shard_span"] is None
+    assert meta["wand_shard_span"] == 64
     out2 = str(tmp_path / "idx2")
     indexer.compact_index(spark, out, out2)
     meta2 = indexer.load_meta(out2)
-    assert meta2["wand_shard_span"] is None
+    assert meta2["wand_shard_span"] == 64
     assert meta2["hot_df"] == 1 << 10
     assert meta2["group_span"] == meta["group_span"]
+
+
+def test_build_rejects_bad_shard_span(spark, tmp_path):
+    """Every index is shard-aligned: a span that is not a positive int
+    is a named ValueError before any Spark job runs (nothing is
+    written), for the one-shot and the resumable build alike."""
+    corpus = spark.createDataFrame(DOCS, "doc_id long, text string")
+    for bad in (None, 0):
+        for build in (indexer.build_index, indexer.build_index_resumable):
+            out = str(tmp_path / f"{build.__name__}_{bad}")
+            with pytest.raises(ValueError, match="shard_span"):
+                build(
+                    spark, corpus, out, fields=["text"],
+                    analyzer="simple", num_buckets=4, shard_span=bad,
+                )
+            assert not os.path.exists(out)
+
+
+def test_legacy_meta_without_span_routes_to_join(spark, tmp_path):
+    """A meta that predates the shard-aligned layout (no
+    ``wand_shard_span``) must not reach the WAND kernels, even over
+    the 1M-postings gate: it serves through the compiled join plan.
+    Compacting a legacy index (span recorded as null) writes the
+    default aligned layout."""
+    import json
+
+    from cs_search_engine_architecture_spark.plans.query_parser import (
+        parse_query,
+    )
+
+    docs = [(0, "alpha beta"), (1, "alpha gamma"), (2, "beta delta"),
+            (3, "gamma delta")]
+    out = _build(spark, tmp_path, docs=docs)
+    eng = SearchEngine(spark, out, cache=False)
+    del eng.meta["wand_shard_span"]
+    eng.meta["num_postings"] = max(eng.meta["num_postings"], 1_000_000)
+    got = [
+        (r["doc_id"], r["score"])
+        for r in eng.search("alpha or beta", 10).collect()
+    ]
+    assert eng.last_strategy == "join"
+    want = [
+        (r["doc_id"], r["score"])
+        for r in eng._scored(parse_query("alpha or beta", analyzer="simple"))
+        .orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
+    ]
+    assert got == want and got
+
+    meta = indexer.load_meta(out)
+    meta["wand_shard_span"] = None
+    with open(os.path.join(out, "meta.json"), "w") as fh:
+        json.dump(meta, fh)
+    out2 = str(tmp_path / "idx2")
+    indexer.compact_index(spark, out, out2)
+    assert (
+        indexer.load_meta(out2)["wand_shard_span"]
+        == indexer.DEFAULT_WAND_SHARD_SPAN
+    )
 
 
 def test_build_rejects_out_of_domain_doc_ids(spark, tmp_path):
@@ -156,28 +214,24 @@ def test_add_docs_duplicate_check_sees_zero_posting_docs(spark, tmp_path):
         indexer.add_docs(spark, out, dup)
 
 
-def test_unaligned_wand_fallback_span_bounds_fanout(spark, tmp_path):
-    """Explode-based WAND on a NON-shard-aligned index with a wide,
-    sparse doc-id space: the effective span grows so a corpus-spanning
-    block fans out to a bounded shard count, and results still equal
-    the join path exactly."""
-    from cs_search_engine_architecture_spark.operators import wand
-
-    docs = [(i * 37_000_000, f"alpha common{' beta' if i % 3 else ''}")
-            for i in range(30)]
-    out = _build(spark, tmp_path, docs=docs, shard_span=None)
-    eng = SearchEngine(spark, out, cache=False)
-    blocks = indexer.load_blocks(spark, out)
-    got = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in wand.wand_or_topk(
-            spark, blocks, 4, ["alpha", "beta"], 10
-        ).collect()
-    ]
+def test_wide_sparse_ids_wand_equals_join(spark, tmp_path):
+    """WAND over a wide, sparse doc-id space (one doc per shard at the
+    default span): the router takes the sharded kernel over the 1M
+    gate, and its top-k equals the join path exactly."""
     from cs_search_engine_architecture_spark.plans.query_parser import (
         parse_query,
     )
 
+    docs = [(i * 37_000_000, f"alpha common{' beta' if i % 3 else ''}")
+            for i in range(30)]
+    out = _build(spark, tmp_path, docs=docs)
+    eng = SearchEngine(spark, out, cache=False)
+    eng.meta["num_postings"] = max(eng.meta["num_postings"], 1_000_000)
+    got = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in eng.search("alpha or beta", 10).collect()
+    ]
+    assert eng.last_strategy == "wand_or_sharded"
     want = [
         (r["doc_id"], round(r["score"], 9))
         for r in eng._scored(parse_query("alpha or beta", analyzer="simple"))

@@ -105,6 +105,24 @@ def test_embedding_dup_pairs(spark):
     assert set(pairs) == {(0, 1)} and pairs[(0, 1)] > 0.99
 
 
+def test_embedding_zero_norm_pairs_with_nothing(spark):
+    """One zero-norm contract for both embedding near-dup paths: a
+    zero vector's cosine is undefined, so it pairs with nothing (the
+    exhaustive reference must not die on an ANSI divide-by-zero)."""
+    zero = [0.0] * 64
+    unit = [1.0] + [0.0] * 63
+    emb = spark.createDataFrame(
+        [(1, zero), (2, zero), (3, unit), (4, unit)],
+        "vec_id long, embedding array<float>",
+    )
+    for pairs in (DD.embedding_dup_pairs_bucketed, DD.embedding_dup_pairs):
+        got = sorted(
+            (r["id_a"], r["id_b"], r["cos"])
+            for r in pairs(emb, 0.9).collect()
+        )
+        assert got == [(3, 4, 1.0)], (pairs.__name__, got)
+
+
 def test_containment_catches_subset_dup(spark):
     """A short doc fully embedded in a long one: Jaccard is tiny but
     containment_a = 1.0 — the asymmetric near-subset case."""

@@ -1,6 +1,6 @@
 """Partition-parallel block-max WAND: exact equality with the join-based
-OR path across term mixes, k values, and shard spans (including spans
-that force blocks to straddle shard boundaries)."""
+OR/AND paths across term mixes, k values, and shard spans (the build
+span and its multiples — every layout a shard-aligned build admits)."""
 
 from __future__ import annotations
 
@@ -51,14 +51,24 @@ def _or_join_topk(engine, terms, k):
     ]
 
 
-def _wand_topk(engine, terms, k, span=wand.DEFAULT_SHARD_SPAN):
+def _sharded_topk(engine, kind, terms, k, span=None):
+    """Top-k through the one pre-sharded entry: over the engine's
+    cached layout, or re-sharded at ``span`` (a multiple of the build
+    span, so every block still lies in one shard)."""
+    if span is None:
+        span = engine.meta["wand_shard_span"]
+        sharded = engine._wand_sharded()
+    else:
+        assert span % engine.meta["wand_shard_span"] == 0
+        sharded = wand.preshard_blocks(engine.blocks, span, 8)
     return [
         (r["doc_id"], round(r["score"], 9))
-        for r in wand.wand_or_topk(
-            engine.spark, engine.blocks, engine.num_buckets, terms, k,
-            shard_span=span,
-        ).collect()
+        for r in wand.wand_topk(sharded, kind, terms, k, span).collect()
     ]
+
+
+def _wand_topk(engine, terms, k, span=None):
+    return _sharded_topk(engine, "or", terms, k, span)
 
 
 TERM_SETS = [
@@ -77,7 +87,7 @@ def test_wand_equals_join_or(engine, terms, k):
     assert _wand_topk(engine, terms, k) == want
 
 
-@pytest.mark.parametrize("span", [64, 1 << 10, 1 << 20])
+@pytest.mark.parametrize("span", [512, 1 << 10, 1 << 20])
 def test_wand_shard_span_invariance(engine, span):
     terms = ["index", "spark", "data"]
     want = _wand_topk(engine, terms, 25)
@@ -120,14 +130,8 @@ def _and_join_topk(engine, terms, k):
     ]
 
 
-def _wand_and(engine, terms, k, span=wand.DEFAULT_SHARD_SPAN):
-    return [
-        (r["doc_id"], round(r["score"], 9))
-        for r in wand.wand_and_topk(
-            engine.spark, engine.blocks, engine.num_buckets, terms, k,
-            shard_span=span,
-        ).collect()
-    ]
+def _wand_and(engine, terms, k, span=None):
+    return _sharded_topk(engine, "and", terms, k, span)
 
 
 AND_TERM_SETS = [
@@ -145,7 +149,7 @@ def test_wand_and_equals_join(engine, terms, k):
     assert _wand_and(engine, terms, k) == _and_join_topk(engine, terms, k)
 
 
-@pytest.mark.parametrize("span", [64, 1 << 10, 1 << 20])
+@pytest.mark.parametrize("span", [512, 1 << 10, 1 << 20])
 def test_wand_and_span_invariance(engine, span):
     terms = ["index", "spark", "data"]
     want = _wand_and(engine, terms, 25)
@@ -164,12 +168,7 @@ def test_blocks_respect_shard_boundaries(engine):
 
 @pytest.mark.parametrize("terms", [["index", "spark"], ["merg", "batch", "row"]])
 def test_sharded_wand_rank_identity(engine, terms):
-    span = engine.meta["wand_shard_span"]
-    sharded = engine._wand_sharded()
-    got = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in wand.wand_or_topk_sharded(sharded, terms, 10, span).collect()
-    ]
+    got = _wand_topk(engine, terms, 10)
     want = [(d, round(s, 9)) for d, s in _or_join_topk(engine, terms, 10)]
     assert got == want
 
@@ -179,8 +178,8 @@ def test_sharded_wand_plan_has_no_exchange(engine):
     cached HashPartitioning(shard) — filter + sort + kernel, no
     ShuffleExchange above the InMemoryTableScan."""
     span = engine.meta["wand_shard_span"]
-    out = wand.wand_or_topk_sharded(
-        engine._wand_sharded(), ["index", "spark"], 10, span
+    out = wand.wand_topk(
+        engine._wand_sharded(), "or", ["index", "spark"], 10, span
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     kernel_part = plan.split("InMemoryTableScan")[0]
@@ -191,21 +190,8 @@ def test_sharded_wand_plan_has_no_exchange(engine):
 
 
 def test_sharded_and_rank_identity(engine):
-    span = engine.meta["wand_shard_span"]
     terms = ["index", "2024"]
-    got = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in wand.wand_and_topk_sharded(
-            engine._wand_sharded(), terms, 10, span
-        ).collect()
-    ]
-    want = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in wand.wand_and_topk(
-            engine.spark, engine.blocks, engine.num_buckets, terms, 10
-        ).collect()
-    ]
-    assert got == want
+    assert _wand_and(engine, terms, 10) == _and_join_topk(engine, terms, 10)
 
 
 def test_wand_and_range_skip_actually_skips(spark, engine):

@@ -141,6 +141,9 @@ def main() -> int:
     )
     docs = make_docs(args.docs, rng)
     out = tempfile.mkdtemp(prefix="soak_idx_")
+    # about four WAND shards over the corpus, so shard-local top-ks
+    # really merge
+    span = max(16, args.docs // 4)
     if args.single_field:
         docs = [(d, [f"{f[0]} {f[1]}".strip()]) for d, f in docs]
         corpus = spark.createDataFrame(
@@ -148,7 +151,7 @@ def main() -> int:
         )
         indexer.build_index(
             spark, corpus, out, fields=["text"], block_size=8,
-            num_buckets=4,
+            num_buckets=4, shard_span=span,
         )
     else:
         corpus = spark.createDataFrame(
@@ -157,9 +160,12 @@ def main() -> int:
         )
         indexer.build_index(
             spark, corpus, out, fields=["title", "body"], block_size=8,
-            num_buckets=4,
+            num_buckets=4, shard_span=span,
         )
     engine = SearchEngine(spark, out)
+    # the router's WAND gate is 1M postings: lift the small soak index
+    # over it so leg 5 exercises the sharded WAND kernels too
+    engine.meta["num_postings"] = max(engine.meta["num_postings"], 1_000_000)
     assert engine.compiler.single_field is bool(args.single_field)
     oracle = OracleIndex(docs)
 
