@@ -115,6 +115,13 @@ def varint_sizes(values: np.ndarray) -> np.ndarray:
     )
 
 
+def split_bytes(buf: bytes, offsets: np.ndarray) -> list[bytes]:
+    """Cut ``buf`` at ``offsets`` (n+1 ascending byte offsets, the first
+    0 and the last ``len(buf)``) into its n pieces."""
+    o = offsets.tolist()
+    return [buf[i:j] for i, j in zip(o[:-1], o[1:])]
+
+
 def varint_encode_ragged(
     flat: np.ndarray, counts: np.ndarray
 ) -> list[bytes]:
@@ -123,25 +130,11 @@ def varint_encode_ragged(
     vectorized encode pass over the whole batch — the per-group form is
     what the packed posting schema stores, and varint is per-value, so
     group-wise concatenation later reproduces the identical block bytes."""
-    counts = np.ascontiguousarray(counts, dtype=np.int64)
-    if flat.size == 0:
-        return [b""] * counts.size
-    big = varint_encode(flat)
-    nbytes = varint_sizes(flat)
-    starts = np.zeros(counts.size, dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:])
-    byte_counts = np.zeros(counts.size, dtype=np.int64)
-    nz = counts > 0
-    byte_counts[nz] = np.add.reduceat(nbytes, starts[nz])
-    # reduceat with duplicate start indices (empty groups) mis-sums;
-    # handled by masking to non-empty groups above
-    byte_offsets = np.zeros(counts.size + 1, dtype=np.int64)
-    np.cumsum(byte_counts, out=byte_offsets[1:])
-    mv = memoryview(big)
-    return [
-        bytes(mv[byte_offsets[i] : byte_offsets[i + 1]])
-        for i in range(counts.size)
-    ]
+    value_ends = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=value_ends[1:])
+    byte_ends = np.zeros(len(flat) + 1, dtype=np.int64)
+    np.cumsum(varint_sizes(flat), out=byte_ends[1:])
+    return split_bytes(varint_encode(flat), byte_ends[value_ends])
 
 
 def encode_scores(scores: np.ndarray) -> bytes:

@@ -18,15 +18,17 @@ Stages (SURVEY.md §2.3, §7 Phase 1-2):
    vocabulary is small; sort-merge on term otherwise) and compute the
    index-time BM25 exactly as ``sea/document.pyx:254-280`` as JVM column
    arithmetic (whole-stage codegen; no UDF).
-4. **block build** — ``groupBy(term_id, doc_group).applyInPandas``:
-   doc-range salting (terms with ``df > hot_df`` split into doc ranges of
-   about ``group_span`` postings each) splits hot-term posting lists
-   across tasks while keeping each group doc-contiguous, so per-term
-   global doc_id order is the concatenation of its groups — no second
-   merge stage, unlike hash-salting (this replaces the reference's
-   single-threaded k-way heap merge, B2/B4). Each group emits delta-gap +
-   varint compressed blocks of ``block_size`` postings with per-block
-   max_score metadata (B3 upgrade). Stages 3-5 are one function,
+4. **block build** — ``groupBy(pmod(term_id, M), doc_group)
+   .applyInPandas``: one call flushes many terms, SPIMI-style (B1),
+   cutting all their blocks in one vectorized pass. Doc-range salting
+   (terms with ``df > hot_df`` split into doc ranges of about
+   ``group_span`` postings each) spreads hot-term lists across tasks
+   while keeping each ``doc_group`` doc-contiguous, so per-term doc_id
+   order is the concatenation of its groups — no second merge stage
+   (this replaces the reference's single-threaded k-way heap merge,
+   B2/B4). Blocks are delta-gap + varint compressed, ``block_size``
+   postings each, with per-block max_score metadata (B3 upgrade).
+   Stages 3-5 are one function,
    ``_write_blocks``: full builds and ``add_docs`` delta segments (scored
    with frozen base stats) write blocks through the same path.
 5. **sink** — blocks repartitioned by ``term_bucket = pmod(xxhash64(term),
@@ -56,10 +58,9 @@ from cs_search_engine_architecture_spark.operators.partitioning import (
     widen_input,
 )
 from cs_search_engine_architecture_spark.operators.compression import (
-    delta_encode,
     encode_scores,
     grouped_delta_encode,
-    varint_encode,
+    split_bytes,
     varint_encode_ragged,
 )
 
@@ -81,12 +82,9 @@ DEFAULT_NUM_BUCKETS = 64
 # doc-contiguous groups targeting GROUP_TARGET postings each (the
 # ``group_span`` build parameter), so no single task owns the Zipf head
 # (otherwise one straggler encodes the hottest term while every other
-# core idles). Sizing by TARGET POSTINGS
-# — ngroups = ceil(df / target), span = ceil(N_docs / ngroups) — keeps
-# the total group count ~ num_postings / target at ANY corpus size;
-# fixed doc-span salting made group count grow superlinearly with the
-# corpus and the per-group applyInPandas overhead dominated the build
-# (measured 6x groups and 4x encode time at 2.5x docs).
+# core idles) — ngroups = ceil(df / target), span = ceil(N_docs /
+# ngroups). Salting buys parallelism only: encoder calls are keyed by
+# (term_id mod M, doc_group), so it does not set the call count.
 DEFAULT_GROUP_TARGET = 1 << 13  # target postings per hot-term salt group
 
 # target postings per ENCODE task: sizes the wide shuffle from the
@@ -480,94 +478,88 @@ def _make_block_encoder_id(block_size: int, num_fields: int, shard_span: int):
     BLOCKS frame with term_stats. Decoded blocks are pinned to
     ``OracleIndex`` by ``tests/test_index_build.py``.
 
+    One call encodes MANY terms (a SPIMI-style flush, grouped on
+    ``(pmod(term_id, M), doc_group)``): the ~9 ms per-call cost was
+    paid per (term, doc_group), now per ~num_postings/M rows. Rows are
+    sorted by (term_id, doc_id); a block starts where the term, the
+    doc_group or the doc shard changes and every ``block_size``
+    postings within such a run. ``block_no`` is ``doc_group << 32`` +
+    the block's ordinal in its (term, doc_group), so blocks do not
+    depend on which terms share a call (split invariance is tested).
+
     Transport note: an ``applyInArrow`` variant with buffer-level
     position gathering was measured 1.8-2.2x SLOWER than this
     ``applyInPandas`` kernel on 25.8M postings / 6k groups (Spark
     4.1 local[32]) — pandas' block-level binary conversion beats
     per-group pa.Table slicing here, so the pandas transport stays."""
 
-    def encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = int(pdf["term_id"].iloc[0])
-        order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
-        doc_ids = pdf["doc_id"].to_numpy()[order].astype(np.uint64)
-        scores = pdf["score"].to_numpy()[order].astype(np.float32)
-        ff_cols = [
-            pdf[f"ff_{f}"].to_numpy()[order] for f in range(num_fields)
-        ]
-        fl_cols = [
-            pdf[f"fl_{f}"].to_numpy()[order] for f in range(num_fields)
-        ]
-        ff_inter = np.column_stack(ff_cols).ravel().astype(np.uint64)
-        fl_inter = np.column_stack(fl_cols).ravel().astype(np.uint64)
-        pos_counts_all = pdf["pos_count"].to_numpy()[order].astype(np.uint64)
-        pos_bins = pdf["pos_bin"].to_numpy()[order]
-        n = len(doc_ids)
-        nf = num_fields
+    def encode_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
+        order = np.lexsort((pdf["doc_id"].to_numpy(), pdf["term_id"].to_numpy()))
+        n = len(order)
 
-        base_block = int(pdf["doc_group"].iloc[0]) << 32
+        def col(name: str) -> np.ndarray:
+            return pdf[name].to_numpy()[order]
+
+        term, group = col("term_id"), col("doc_group").astype(np.int64)
+        doc_ids = col("doc_id").astype(np.uint64)
+        scores = col("score").astype(np.float32)
+        pos_bins = col("pos_bin")
+        # per-posting field values, interleaved posting-major
+        ff, fl = (
+            np.column_stack([col(f"{c}_{f}") for f in range(num_fields)]).ravel()
+            for c in ("ff", "fl")
+        )
+
+        new_group = np.ones(n, dtype=bool)
+        new_group[1:] = (term[1:] != term[:-1]) | (group[1:] != group[:-1])
         # never let a block cross a doc-shard boundary: blocks are split
         # at shard edges, so shard(first_doc) == shard(last_doc) and the
         # WAND layout needs no block replication
-        sh = (doc_ids // np.uint64(shard_span)).astype(np.int64)
-        run_starts = np.concatenate(
-            [[0], np.flatnonzero(sh[1:] != sh[:-1]) + 1]
-        )
-        starts, ends = [], []
-        for i, rs in enumerate(run_starts):
-            run_end = int(run_starts[i + 1]) if i + 1 < len(run_starts) else n
-            for s0 in range(int(rs), run_end, block_size):
-                starts.append(s0)
-                ends.append(min(s0 + block_size, run_end))
-        nb = len(starts)
-        col_first, col_last, col_count, col_max, col_min = [], [], [], [], []
-        col_docs, col_scores, col_freqs, col_lens = [], [], [], []
-        col_pcnt, col_pos = [], []
-        for start, end in zip(starts, ends):
-            d = doc_ids[start:end]
-            s = scores[start:end]
-            col_first.append(int(d[0]))
-            col_last.append(int(d[-1]))
-            col_count.append(end - start)
-            col_max.append(float(s.max()))
-            col_min.append(float(s.min()))
-            col_docs.append(varint_encode(delta_encode(d)))
-            col_scores.append(encode_scores(s))
-            col_freqs.append(varint_encode(ff_inter[start * nf : end * nf]))
-            col_lens.append(varint_encode(fl_inter[start * nf : end * nf]))
-            col_pcnt.append(varint_encode(pos_counts_all[start:end]))
-            col_pos.append(b"".join(pos_bins[start:end]))
-        return pd.DataFrame(
-            {
-                "term_id": pd.Series([term] * nb, dtype="int64"),
-                "block_no": pd.Series(
-                    np.arange(nb, dtype=np.int64) + base_block
-                ),
-                "first_doc": pd.Series(col_first, dtype="int64"),
-                "last_doc": pd.Series(col_last, dtype="int64"),
-                "count": pd.Series(col_count, dtype="int32"),
-                "max_score": pd.Series(col_max, dtype="float32"),
-                "min_score": pd.Series(col_min, dtype="float32"),
-                "doc_ids_bin": pd.Series(col_docs, dtype="object"),
-                "scores_bin": pd.Series(col_scores, dtype="object"),
-                "freqs_bin": pd.Series(col_freqs, dtype="object"),
-                "lens_bin": pd.Series(col_lens, dtype="object"),
-                "pos_counts_bin": pd.Series(col_pcnt, dtype="object"),
-                "positions_bin": pd.Series(col_pos, dtype="object"),
-            }
-        )
+        sh = doc_ids // np.uint64(shard_span)
+        new_run = new_group.copy()
+        new_run[1:] |= sh[1:] != sh[:-1]
+        run_starts = np.flatnonzero(new_run)
+        in_run = np.arange(n) - run_starts[np.cumsum(new_run) - 1]
+        starts = np.flatnonzero(in_run % block_size == 0)
+        bounds = np.append(starts, n)
+        counts = np.diff(bounds)
+        first_in_group = new_group[starts]
+        ordinal = np.arange(len(starts)) - np.flatnonzero(first_in_group)[
+            np.cumsum(first_in_group) - 1
+        ]
+        pos_offsets = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum([len(p) for p in pos_bins], out=pos_offsets[1:])
+        return pd.DataFrame({
+            "term_id": term[starts],
+            "block_no": (group[starts] << 32) + ordinal,
+            "first_doc": doc_ids[starts].astype(np.int64),
+            "last_doc": doc_ids[bounds[1:] - 1].astype(np.int64),
+            "count": counts.astype(np.int32),
+            "max_score": np.maximum.reduceat(scores, starts),
+            "min_score": np.minimum.reduceat(scores, starts),
+            "doc_ids_bin": varint_encode_ragged(
+                grouped_delta_encode(doc_ids, counts), counts
+            ),
+            "scores_bin": split_bytes(encode_scores(scores), 4 * bounds),
+            "freqs_bin": varint_encode_ragged(ff, counts * num_fields),
+            "lens_bin": varint_encode_ragged(fl, counts * num_fields),
+            "pos_counts_bin": varint_encode_ragged(col("pos_count"), counts),
+            "positions_bin": split_bytes(
+                b"".join(pos_bins), pos_offsets[bounds]
+            ),
+        })
 
-    return encode_groups
+    return encode_blocks
 
 
 def _count_checking_ids(corpus: DataFrame, id_col: str, group_span) -> int:
     """Row count fused with a doc-id domain check (one scan, no extra
     job vs the plain ``count()`` it replaces). The block layout packs
     ``doc_group = doc_id // group_span`` into the high 32 bits of a
-    SIGNED 64-bit block id and the numpy kernels round-trip ids through
-    int64/uint64 — a negative or out-of-range id would otherwise
-    surface as an opaque ``OverflowError`` deep inside an encode task;
-    the WAND shard math additionally rides exact integer-in-double
-    division, binding at 2^53."""
+    SIGNED 64-bit block id and the block encoder round-trips ids through
+    uint64/int64, which wraps a negative id SILENTLY — this check is
+    the only guard, so every writer runs it before the encode; the WAND
+    shard math also rides exact integer-in-double division (2^53)."""
     span = max(int(group_span or 1), 1)
     hi_cap = min((1 << 31) * span - 1, (1 << 53) - 1)
     row = corpus.agg(
@@ -691,20 +683,18 @@ def _write_blocks(
 
     ``num_documents`` is the N the salting spans are cut from. Partition
     counts are the caller's: ``encode_parts`` (None leaves the encode
-    shuffle to AQE), ``sink_parts`` for the blocks files and
+    shuffle to AQE; it is also the M of the encode key, which falls
+    back to the session's ``spark.sql.shuffle.partitions``),
+    ``sink_parts`` for the blocks files and
     ``doc_lens_parts``. Returns the ``score_encode_write`` and
     ``doc_lens_write`` walls."""
     nf = len(avg_field_lengths)
     scored = postings.join(term_map, "term").withColumn(
         "score", bm25_score_col(nf, avg_field_lengths, boosts, bs, k)
     )
-    # doc-range salting for hot terms: groups stay doc-contiguous so the
-    # per-term list is the ordered concat of its groups (no re-merge).
-    # ``group_span`` is the TARGET POSTINGS PER GROUP: a term with df
-    # postings splits into ceil(df/target) doc-ranges, so total group
-    # count stays ~ num_postings/target at any corpus size (a fixed
-    # doc-span made groups multiply with the corpus and the per-group
-    # Arrow/pandas overhead dominated the encode stage).
+    # doc-range salting for hot terms (see DEFAULT_GROUP_TARGET): groups
+    # stay doc-contiguous, so a term's list is the ordered concat of its
+    # groups (no re-merge)
     ngroups = F.ceil(F.col("df") / F.lit(float(group_span)))
     span = F.ceil(F.lit(float(max(num_documents, 1))) / ngroups)
     stripped = scored.withColumn(
@@ -714,13 +704,20 @@ def _write_blocks(
             F.floor(F.col("doc_id") / span).cast("long"),
         ).otherwise(F.lit(0)),
     ).drop("term", "df", "idf")
+    # coarse encode key: each applyInPandas call flushes every term of
+    # one (term_id mod M, doc_group) class, so the call count is ~M per
+    # doc_group instead of ~the vocabulary size
+    m = encode_parts or int(
+        postings.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    term_part = F.pmod(F.col("term_id"), F.lit(m))
     if encode_parts is not None:
         # on the group keys, so it SATISFIES the groupBy's clustering
         # (no second exchange), and AQE never coalesces a user-numbered
         # shuffle
-        stripped = stripped.repartition(encode_parts, "term_id", "doc_group")
+        stripped = stripped.repartition(encode_parts, term_part, "doc_group")
     blocks = (
-        stripped.groupBy("term_id", "doc_group")
+        stripped.groupBy(term_part, "doc_group")
         .applyInPandas(
             _make_block_encoder_id(block_size, nf, shard_span),
             BLOCKS_ID_SCHEMA,
@@ -759,7 +756,9 @@ def _write_blocks(
         t = time.time()
         (
             blocks.repartition(sink_parts, "term_bucket")
-            .sortWithinPartitions("term", "first_doc")
+            # led by the partitionBy column, or the write's own sort on
+            # term_bucket replaces this one and files keep shuffle order
+            .sortWithinPartitions("term_bucket", "term", "first_doc")
             .select(*[c.split()[0] for c in BLOCKS_SCHEMA.split(", ")], "term_bucket")
             .write.mode("overwrite")
             .partitionBy("term_bucket")
@@ -843,15 +842,12 @@ def _finalize_index(
     term_stats = load_term_stats(spark, out_path)
     phases["term_stats_write"] = time.time() - _t
 
-    # Size the ENCODE shuffle from the MEASURED staged postings rather
-    # than the session's global shuffle.partitions: this stage's
-    # per-task cost is per-ROW (Arrow->pandas crossing + numpy encode),
-    # so byte-based sizing — a static global, or AQE's byte advisory
-    # over the compact binary shuffle data — undersizes it once the
-    # corpus outgrows the session default (measured at 46.5M postings /
-    # local[32]: 505k postings/s at 64 tasks -> 800k at 128; raising AQE
-    # initialPartitionNum instead did NOT help because the byte advisory
-    # re-coalesced).
+    # Size the ENCODE shuffle (and the encode key's M) from the MEASURED
+    # staged postings: the stage costs per ROW, so byte-based sizing — the
+    # session default or AQE's advisory over compact binary rows —
+    # undersizes it as the corpus grows (46.5M postings / local[32]: 505k
+    # postings/s at 64 tasks -> 800k at 128; AQE initialPartitionNum re-
+    # coalesced and did not help).
     n_parts = max(
         int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
         min(4096, -(-int(num_postings) // ENCODE_POSTINGS_PER_TASK)),
@@ -866,6 +862,21 @@ def _finalize_index(
         shard_span=shard_span, encode_parts=n_parts,
         sink_parts=num_buckets, doc_lens_parts=max(1, num_buckets // 8),
     ))
+
+    # per-shard lineage manifest (B9 / north rule: resumability + metrics);
+    # its scan is the build's last job, so it runs before the wall is read
+    _t = time.time()
+    shard_rows = (
+        load_blocks(spark, out_path)
+        .groupBy("term_bucket")
+        .agg(
+            F.count(F.lit(1)).alias("num_blocks"),
+            F.sum("count").alias("num_postings"),
+            F.countDistinct("term").alias("num_terms"),
+        )
+        .collect()
+    )
+    phases["manifest"] = time.time() - _t
 
     wall = time.time() - t0
     meta = {
@@ -893,17 +904,6 @@ def _finalize_index(
     with open(os.path.join(out_path, "meta.json"), "w") as fh:
         json.dump(meta, fh, indent=2)
 
-    # per-shard lineage manifest (B9 / north rule: resumability + metrics)
-    shard_rows = (
-        load_blocks(spark, out_path)
-        .groupBy("term_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("num_blocks"),
-            F.sum("count").alias("num_postings"),
-            F.countDistinct("term").alias("num_terms"),
-        )
-        .collect()
-    )
     manifest = {
         "built_at_unix": int(t0),
         "wall_sec": wall,
@@ -1500,6 +1500,10 @@ def add_docs(
     # stage the raw rows (compaction re-reads them; also pins the input)
     new_docs.write.mode("overwrite").parquet(os.path.join(out, "corpus"))
     corpus = spark.read.parquet(os.path.join(out, "corpus"))
+    group_span = meta.get("group_span", DEFAULT_GROUP_TARGET)
+    # before any derived table is written: a bad id then leaves a torn
+    # dir with no blocks/ and no meta.json (invisible to serving)
+    num_documents = _count_checking_ids(corpus, id_col, group_span)
 
     work = os.path.join(out, "work", "postings")
     tokenize_postings_packed(
@@ -1535,7 +1539,6 @@ def add_docs(
         "term string, df_local long, idf double, term_id long"
     ).parquet(os.path.join(out, "term_stats"))
 
-    group_span = meta.get("group_span", DEFAULT_GROUP_TARGET)
     num_buckets = meta["num_buckets"]
     _write_blocks(
         postings,
@@ -1555,7 +1558,7 @@ def add_docs(
     )
     delta_meta = {
         "segment": seg,
-        "num_documents": _count_checking_ids(corpus, id_col, group_span),
+        "num_documents": num_documents,
         "num_postings": int(postings.count()),
         "base_num_documents": n_base,
     }

@@ -249,7 +249,7 @@ def test_block_layout_matches_oracle(spark, tmp_path):
 
 def test_concurrent_builds_report_own_phase_walls(spark, tmp_path):
     """Two builds on two threads of one driver each finish and return
-    their own five phase walls: the walls are per call, so neither build
+    their own six phase walls: the walls are per call, so neither build
     clears or mixes the other's."""
     import threading
 
@@ -275,7 +275,7 @@ def test_concurrent_builds_report_own_phase_walls(spark, tmp_path):
     for meta in metas.values():
         assert set(meta["phase_walls"]) == {
             "tokenize_stage", "global_stats", "term_stats_write",
-            "score_encode_write", "doc_lens_write",
+            "score_encode_write", "doc_lens_write", "manifest",
         }
         assert meta["num_postings"] == OracleIndex(DOCS).num_postings
 
@@ -284,3 +284,141 @@ def test_missing_term_empty(built):
     spark, out, meta, _ = built
     blocks = indexer.load_blocks(spark, out)
     assert term_postings(blocks, "zzznotaterm", meta["num_buckets"]).count() == 0
+
+
+def test_phase_walls_account_for_the_build_wall(built):
+    """The manifest scan has its own wall, and the phases that run one
+    after another (all but the overlapped doc_lens write) fit inside the
+    build wall."""
+    _, _, meta, _ = built
+    walls = meta["phase_walls"]
+    assert "manifest" in walls
+    sequential = sum(v for k, v in walls.items() if k != "doc_lens_write")
+    # each wall is rounded to 1 ms in the meta
+    assert sequential <= meta["build_wall_sec"] + 0.0005 * len(walls)
+
+
+def test_block_encoder_is_split_invariant():
+    """One encoder call over many terms writes exactly the blocks that
+    separate calls per (term_id, doc_group) write: several terms, a hot
+    term split over two doc_groups, runs crossing a doc-shard edge, a
+    group of exactly block_size postings and a single-posting term. An
+    empty frame gives an empty frame with the BLOCKS_ID_SCHEMA columns."""
+    import numpy as np
+    import pandas as pd
+
+    from cs_search_engine_architecture_spark.operators.compression import (
+        varint_encode,
+    )
+
+    groups = {
+        (7, 0): [1, 2, 3],                  # exactly block_size
+        (9, 0): [0, 5, 14, 15, 17, 20],     # hot, crosses shard edge 16
+        (9, 1): [40, 41, 44, 50],           # hot, second doc_group
+        (11, 0): [33],                      # single posting
+        (3, 0): [2, 7, 19, 30, 31, 32],     # crosses edges 16 and 32
+    }
+    rows = [
+        (term, group, doc)
+        for (term, group), docs in groups.items()
+        for doc in docs
+    ]
+    order = np.random.default_rng(7).permutation(len(rows))
+    rows = [rows[i] for i in order]
+    n = len(rows)
+    pdf = pd.DataFrame({
+        "doc_id": np.array([d for _, _, d in rows], dtype=np.int64),
+        "ff_0": np.arange(n, dtype=np.int32) % 3 + 1,
+        "fl_0": np.arange(n, dtype=np.int32) % 5 + 2,
+        "ff_1": np.arange(n, dtype=np.int32) % 2,
+        "fl_1": np.arange(n, dtype=np.int32) % 7 + 1,
+        "pos_count": np.full(n, 2, dtype=np.int32),
+        "pos_bin": [varint_encode(np.array([d, 3])) for _, _, d in rows],
+        "term_id": np.array([t for t, _, _ in rows], dtype=np.int64),
+        "score": np.linspace(0.5, 4.0, n),
+        "doc_group": np.array([g for _, g, _ in rows], dtype=np.int64),
+    })
+    encode = indexer._make_block_encoder_id(3, 2, 16)
+
+    got = (
+        encode(pdf)
+        .sort_values(["term_id", "block_no"])
+        .reset_index(drop=True)
+    )
+    want = pd.concat(
+        [
+            encode(pdf[(pdf["term_id"] == t) & (pdf["doc_group"] == g)])
+            for t, g in sorted(groups)
+        ],
+        ignore_index=True,
+    )
+    pd.testing.assert_frame_equal(got, want)
+    assert got["count"].tolist().count(3) >= 3
+    assert (got["block_no"].to_numpy() >> 32).tolist().count(1) == 2
+    assert ((got["first_doc"] // 16) == (got["last_doc"] // 16)).all()
+    assert got["count"].sum() == n
+
+    columns = [c.split()[0] for c in indexer.BLOCKS_ID_SCHEMA.split(", ")]
+    empty = encode(pdf.iloc[:0])
+    assert empty.empty and list(empty.columns) == columns
+
+
+def test_block_layout_independent_of_shuffle_partitions(spark, tmp_path):
+    """The encode key's M follows spark.sql.shuffle.partitions, which
+    moves which terms share an encoder call; the written index does not
+    move, and every bucket file holds its blocks sorted by (term,
+    first_doc) whatever order the encode emitted them in.
+    ``term_stats.term_id`` is left out of the comparison: it is
+    ``monotonically_increasing_id`` over the term-stats shuffle, so it
+    follows the partition count by design, and blocks carry the term
+    string, not the id."""
+    import contextlib
+    import glob
+    import io
+    import os
+    import runpy
+
+    import pyarrow.parquet as pq
+
+    tool = runpy.run_path(
+        os.path.join(
+            os.path.dirname(os.path.dirname(__file__)),
+            "tools", "index_digest.py",
+        )
+    )
+    docs = DOCS + [
+        (i + 10, QUIRK_DOCS[i % len(QUIRK_DOCS)][1]) for i in range(40)
+    ]
+    corpus = spark.createDataFrame(
+        [(d, *f) for d, f in docs], "doc_id long, title string, body string"
+    )
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    outputs = []
+    try:
+        for parts in ("1", "8"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            out = str(tmp_path / f"idx{parts}")
+            indexer.build_index(
+                spark, corpus, out, fields=["title", "body"], block_size=3,
+                num_buckets=4, hot_df=4, group_span=8, shard_span=16,
+            )
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                tool["main"](out)
+            lines = [
+                line for line in buf.getvalue().splitlines()
+                if not line.startswith("base/term_stats ")
+            ]
+            lines.append(tool["table_digest"](
+                os.path.join(out, "term_stats"),
+                ["term", "df", "idf", "term_bucket"],
+            ))
+            outputs.append(lines)
+            for f in glob.glob(os.path.join(out, "blocks", "*", "*.parquet")):
+                t = pq.read_table(f, columns=["term", "first_doc"])
+                keys = list(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+                assert keys == sorted(keys), f
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert len(outputs[0]) == 5
+    assert outputs[0] == outputs[1]

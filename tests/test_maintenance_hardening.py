@@ -164,6 +164,27 @@ def test_build_rejects_out_of_domain_doc_ids(spark, tmp_path):
             )
 
 
+def test_add_docs_rejects_out_of_domain_doc_ids_before_writing(
+    spark, tmp_path
+):
+    """add_docs checks the staged rows' id domain before it tokenizes:
+    a bad id raises the named ValueError and the torn delta dir holds
+    neither blocks/ nor the meta.json commit marker."""
+    docs = [(i, f"spark doc number {i}") for i in range(20)]
+    out = _build(spark, tmp_path, docs=docs)
+    for seg, bad in enumerate((-1, 1 << 60)):
+        new = spark.createDataFrame(
+            [(bad, "spark new text"), (100 + seg, "other text")],
+            "doc_id long, text string",
+        )
+        with pytest.raises(ValueError, match="doc ids must be"):
+            indexer.add_docs(spark, out, new, segment=seg)
+        torn = os.path.join(out, f"delta_{seg:05d}")
+        assert not os.path.exists(os.path.join(torn, "blocks"))
+        assert not os.path.exists(os.path.join(torn, "meta.json"))
+    assert indexer.load_delta_metas(out) == []
+
+
 def test_resumable_num_slices_mismatch_refused(spark, tmp_path):
     """Checkpoints cut under one pmod layout must not be silently mixed
     with another: resuming with a different num_slices raises."""

@@ -519,5 +519,5 @@ def test_compact_reports_only_its_own_phase_walls(spark, tmp_path):
     assert "tokenize_stage" not in walls
     assert set(walls) == {
         "global_stats", "term_stats_write", "score_encode_write",
-        "doc_lens_write",
+        "doc_lens_write", "manifest",
     }
