@@ -30,17 +30,17 @@ from cs_search_engine_architecture_spark.plans.query_parser import (
 
 
 class SearchEngine:
-    # max block-metadata rows the single-term block-max path collects to
-    # the driver (phase-1 bound only needs the top-max_score prefix;
-    # exactness never depends on the prefix size — a looser s-tilde just
-    # decodes more blocks distributively in phase 2)
-    META_COLLECT_CAP = 65536
-
     def __init__(self, spark: SparkSession, index_path: str, cache: bool = True):
         self.spark = spark
         self.index_path = index_path
         self._cache = cache
         self.meta = indexer.load_meta(index_path)
+        # Spark's cache is keyed by plan, and a parquet scan's plan by
+        # its root paths: an older engine's persisted frames over this
+        # path (the pre-sharded blocks above all, persisted whatever
+        # ``cache`` says) would otherwise serve the files an in-place
+        # compaction replaced. Re-list them first; no-op when none.
+        spark.catalog.refreshByPath(index_path)
         self.blocks = indexer.load_blocks(spark, index_path)
         if cache:
             # analog of the reference's postings cache (sea/engine.pyx:314-324)
@@ -69,8 +69,8 @@ class SearchEngine:
             # (docs invisible until the update replays) instead of
             # raising on every query for a missing delta frame.
             self.updated_ids = None
-        # delta segments (add_docs) contribute postings to the WAND/
-        # block-max routing threshold; world stats stay frozen (see
+        # delta segments (add_docs) contribute postings to the WAND
+        # routing threshold; world stats stay frozen (see
         # indexer.add_docs)
         delta_metas = indexer.load_delta_metas(index_path)
         self.has_delta = bool(delta_metas)
@@ -86,7 +86,7 @@ class SearchEngine:
         land on disk, ``refresh()`` makes this engine serve them without
         constructing a new object or re-warming callers' references.
         Drops every derived cache (persisted unified blocks, pre-sharded
-        WAND frame, block metadata, term stats, compilers, counts) and
+        WAND frame, term stats, compilers, counts) and
         re-runs initialization; returns self for chaining."""
         if self._cache:
             self.blocks.unpersist()
@@ -101,7 +101,7 @@ class SearchEngine:
         for attr in (
             "_delta_blocks", "_base_blocks", "_upd_compiler",
             "_tomb_count", "_upd_count", "_wand_sharded_df",
-            "_block_meta_cache", "_term_stats", "_kgram",
+            "_term_stats", "_kgram",
             # _doc_lens feeds LTR features (field lengths) and _df_cache
             # the WAND/join routing heuristic — both change when
             # maintenance lands; serving either stale is a wrong feature
@@ -234,10 +234,10 @@ class SearchEngine:
         # mask and re-limit (exact). With in-place updates, a fast path
         # additionally (a) over-fetches by U more — an updated doc's TWO
         # live versions can occupy two posting rows, both masked — and
-        # (b) unions the delta-only resurrection arm before re-limiting
-        # (the arm's scores are exact; see _update_arm). A pathological
-        # mask count (> _TOMB_FASTPATH_CAP) falls back to the masked
-        # join path; compact_index resets both counts to 0.
+        # (b) unions the delta arm before re-limiting (the arm's scores
+        # are exact; see _delta_arm). A pathological mask count
+        # (> _TOMB_FASTPATH_CAP) falls back to the masked join path;
+        # compact_index resets both counts to 0.
         k_fetch = top_k
         over_cap = False
         if self.tombstones is not None:
@@ -246,103 +246,102 @@ class SearchEngine:
             over_cap = t_count + u_count > self._TOMB_FASTPATH_CAP
             k_fetch = top_k + t_count + u_count
         route, terms = self._route(ast, over_cap)
-        if route == "single_term_blockmax":
-            strategy = route + ("+update_arm" if upd else "")
-        elif route in ("wand_or", "wand_and"):
-            strategy = (
-                route + "_sharded" + ("+delta_arm" if self.has_delta else "")
-            )
-        else:
-            strategy = "join_masked_update_arm" if upd else route
-        self.last_strategy = strategy
-
-        def _finish(raw: DataFrame) -> DataFrame:
-            if self.tombstones is None:
-                return raw
-            out = self._mask(raw)
-            if upd:
-                out = out.unionByName(self._update_arm(ast))
+        if route in ("join", "join_masked"):
+            self.last_strategy = "join_masked_update_arm" if upd else route
             return (
-                out.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
+                self._scored(ast)
+                .orderBy(F.desc("score"), F.asc("doc_id"))
+                .limit(top_k)
             )
-
-        if route == "single_term_blockmax":
-            return _finish(self._topk_single_term(terms[0], k_fetch))
-        if route in ("wand_or", "wand_and"):
-            # With a populated delta tier (adds and/or pending updates)
-            # the kernel runs over BASE blocks only — the kernel's
-            # coverage bounds assume one term's blocks are doc-disjoint,
-            # which an updated doc's two live versions (base old + delta
-            # new) would violate, and delta block ranges can interleave
-            # base ranges. Base blocks always satisfy the bound (one
-            # build, one version per doc), so: exact base top-k from the
-            # kernel, tombstones masked (old versions of updated docs
-            # die here), then the delta arm (a delta-only compile of the
-            # SAME ast — every delta doc's complete postings live there)
-            # unions in and the union re-limits. WAND routing therefore
-            # survives adds AND pending in-place updates; merge/compact
-            # only shrink the arm.
-            from cs_search_engine_architecture_spark.operators.wand import (
-                wand_topk,
-            )
-
-            # served from the cached pre-sharded layout with NO
-            # per-query exchange
-            raw = wand_topk(
-                self._wand_sharded(), route.removeprefix("wand_"), terms,
-                k_fetch, self.meta["wand_shard_span"],
-            )
-            if not self.has_delta:
-                return _finish(raw)
-            out = self._mask(raw).unionByName(self._delta_arm(ast))
-            return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
-        return (
-            self._scored(ast)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(top_k)
+        self.last_strategy = route + ("+delta_arm" if self.has_delta else "")
+        from cs_search_engine_architecture_spark.operators.wand import (
+            tree_topk,
+            wand_topk,
         )
+
+        # Every term-only shape is served from the cached pre-sharded
+        # layout with NO per-query exchange: one kernel call per doc
+        # shard, one Spark job. With a populated delta tier (adds
+        # and/or pending in-place updates) the kernels run over BASE
+        # blocks only — WAND's coverage bounds assume one term's blocks
+        # are doc-disjoint, which an updated doc's two live versions
+        # (base old + delta new) would violate, and every kernel scores
+        # a doc from its postings in ONE tier. Base blocks hold one
+        # version per doc, so: exact base top-k from the kernel,
+        # tombstones masked (old versions of updated docs die here),
+        # then the delta arm (a delta-only compile of the SAME ast —
+        # every delta doc's complete postings live there) unions in and
+        # the union re-limits. merge/compact only shrink the arm.
+        sharded, span = self._wand_sharded(), self.meta["wand_shard_span"]
+        if route == "tree_sharded":
+            raw = tree_topk(sharded, ast, k_fetch, span)
+        else:
+            kind = "and" if route == "wand_and_sharded" else "or"
+            raw = wand_topk(sharded, kind, terms, k_fetch, span)
+        if self.has_delta:
+            out = self._mask(raw).unionByName(self._delta_arm(ast))
+        elif self.tombstones is not None:
+            out = self._mask(raw)
+        else:
+            return raw
+        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
 
     def _route(self, ast, over_cap: bool) -> tuple[str, list[str]]:
         """(route, terms) for ``search`` from the query's
-        ``classify_query`` shape: a single term -> block-max; a flat OR
-        / AND of DISTINCT terms at >= 1M postings -> WAND (AND only when
-        a selective term exists); everything else -> the compiled join
-        plan ("join_masked" when the tombstone/update mask exceeds the
-        fast-path cap). WAND needs the shard-aligned block layout: a
-        legacy meta without ``wand_shard_span`` routes to the join."""
+        ``classify_query`` shape, first match wins (the route is the
+        reported strategy, before any "+delta_arm" suffix):
+
+        1. a tombstone/update mask over the fast-path cap ->
+           "join_masked" (the compiled plan under the mask);
+        2. a legacy meta without ``wand_shard_span`` -> "join" for every
+           shape: the sharded kernels need the shard-aligned layout;
+        3. an empty query, a phrase, or a phrase inside a tree -> "join"
+           (the compiled plan's position-window joins);
+        4. a single term -> "single_term_blockmax" (``wand_topk`` over
+           one term; the name predates the kernel);
+        5. a flat OR / AND of DISTINCT terms at >= 1M postings ->
+           "wand_or_sharded" / "wand_and_sharded" (AND only when a
+           selective term exists);
+        6. every other term-only tree -> "tree_sharded" (``tree_topk``:
+           the lazy-NOT algebra per doc shard).
+
+        Steps 4-6 run one exchange-free job over ``_wand_sharded()``;
+        only the WAND-AND guard's df lookup touches Spark while
+        routing."""
         if over_cap:
             return "join_masked", []
+        if not self.meta.get("wand_shard_span"):
+            return "join", []
         shape = classify_query(ast)
-        kind, terms = (shape[0], shape[1]) if shape else (None, [])
+        if shape is None or shape[0] == "phrase":
+            return "join", []
+        kind, terms = shape[0], shape[1]
         if kind == "or" and len(terms) == 1:
             return "single_term_blockmax", terms
-        # below ~1M postings the join path's single job is cheaper than
-        # WAND's (same scale gate as the single-term block-max path — at
-        # cluster scale WAND always wins). Duplicate terms double-count
-        # in the summed score; the join path reproduces that reference
-        # quirk, so they stay there.
+        # The 1M-postings gate picks between WAND's block skipping and
+        # the tree kernel, which decodes every block of the query terms
+        # in the shard (the threshold is the old WAND-vs-join one).
+        # Duplicate terms double-count in the summed score, which the
+        # tree kernel reproduces leaf by leaf, so they go there.
         if (
-            kind not in ("or", "and")
-            or len(set(terms)) != len(terms)
-            or self.meta.get("num_postings", 0) < 1_000_000
-            or not self.meta.get("wand_shard_span")
+            kind in ("or", "and")
+            and len(set(terms)) == len(terms)
+            and self.meta.get("num_postings", 0) >= 1_000_000
         ):
-            return "join", []
-        if kind == "or":
-            # scored disjunctions: partition-parallel block-max WAND
-            # instead of a chain of full-outer joins
-            return "wand_or", terms
-        # conjunctions: metadata range-skip intersection — blocks whose
-        # doc range overlaps no block of some other term never decode.
-        # Pays only when a SELECTIVE term exists (sparse ranges skip the
-        # hot term's blocks); dense-only conjunctions intersect faster
-        # as a broadcast/SMJ join.
-        dfs = self._term_dfs(terms)
-        if min(dfs.values(), default=0) <= max(
-            10_000, self.meta["num_postings"] // 200
-        ):
-            return "wand_and", terms
-        return "join", []
+            if kind == "or":
+                # scored disjunctions: partition-parallel block-max WAND
+                return "wand_or_sharded", terms
+            # conjunctions: metadata range-skip intersection — blocks
+            # whose doc range overlaps no block of some other term never
+            # decode. Pays only when a SELECTIVE term exists (sparse
+            # ranges skip the hot term's blocks); dense-only
+            # conjunctions go to the tree kernel's plain intersection.
+            dfs = self._term_dfs(terms)
+            if min(dfs.values(), default=0) <= max(
+                10_000, self.meta["num_postings"] // 200
+            ):
+                return "wand_and_sharded", terms
+        return "tree_sharded", []
 
     # the routing decision of the most recent search() — observability
     # for plan_info and perf triage; never consulted by the engine
@@ -406,104 +405,6 @@ class SearchEngine:
             for t in missing:
                 self._df_cache[t] = found.get(t, 0)
         return {t: self._df_cache[t] for t in terms}
-
-    def _topk_single_term(self, term: str, k: int) -> DataFrame:
-        """Block-max top-k (north rule: per-block max-score skipping —
-        the distributed form of block-max WAND for the 1-term case;
-        ``sea/engine.pyx``'s tier escalation Q7 is subsumed by this).
-
-        Two exact phases over the block METADATA (one tiny row per
-        ``block_size`` postings; the posting payloads stay encoded):
-
-        1. decode only the count-prefix of blocks in descending
-           ``max_score`` order until >= k postings are covered; their
-           exact k-th best score s̃ is a lower bound on the true k-th
-           score (k-th largest over a subset never exceeds the
-           superset's);
-        2. any posting that can still reach the top-k lies in a block
-           with ``max_score >= s̃`` (block max bounds every posting in
-           it), so the final answer decodes exactly those blocks.
-
-        Exactness does not depend on s̃ quality — a loose bound only
-        decodes more blocks. Worst case (all scores equal, e.g. a
-        salted hot stopword) degrades to the full decode the naive path
-        always pays; the Zipf middle is where the skip wins."""
-        from cs_search_engine_architecture_spark.operators.decode import (
-            term_postings,
-        )
-
-        term_blocks = self.blocks.where(
-            (
-                F.col("term_bucket")
-                == F.pmod(F.xxhash64(F.lit(term)), F.lit(self.num_buckets)).cast(
-                    "int"
-                )
-            )
-            & (F.col("term") == term)
-        )
-        if not hasattr(self, "_block_meta_cache"):
-            self._block_meta_cache: dict[str, tuple] = {}
-        cached = self._block_meta_cache.get(term)
-        if cached is None:
-            # one tiny row per block_size postings; cached per term like
-            # the reference's postings cache (sea/engine.pyx:314-324) —
-            # but holding only metadata, never decoded payloads. The
-            # collect is BOUNDED: TakeOrderedAndProject ships at most
-            # META_COLLECT_CAP+1 rows (a 10^9-posting hot term has ~8M
-            # block-metadata rows — the driver never holds them all;
-            # phase 1 only needs the highest-max_score prefix, and
-            # phase 2 is a distributed filter on the full block set).
-            cap = self.META_COLLECT_CAP
-            rows = (
-                term_blocks.select("block_no", "count", "max_score")
-                .orderBy(F.desc("max_score"))
-                .limit(cap + 1)
-                .collect()
-            )
-            capped = len(rows) > cap
-            cached = (rows[:cap], capped)
-            self._block_meta_cache[term] = cached
-        by_max, capped = cached
-        if not by_max:
-            return self.compiler.empty()
-        if not capped:
-            total = sum(r["count"] for r in by_max)
-            if total <= max(4 * k, 2048):
-                # short list: the two-phase bound costs more driver
-                # round-trips than the full decode it would save
-                return (
-                    term_postings(term_blocks, term, self.num_buckets)
-                    .orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(k)
-                )
-        cum, cand_cut = 0, by_max[-1]["max_score"]
-        for r in by_max:
-            cum += r["count"]
-            if cum >= k:
-                cand_cut = r["max_score"]
-                break
-        cand = term_postings(
-            term_blocks.where(F.col("max_score") >= cand_cut),
-            term,
-            self.num_buckets,
-        )
-        kth = (
-            cand.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
-        if len(kth) < k:  # fewer than k postings exist in total
-            return self.spark.createDataFrame(
-                [(r["doc_id"], r["score"]) for r in kth],
-                "doc_id long, score double",
-            )
-        s_tilde = kth[-1]["score"]
-        final_blocks = term_blocks.where(F.col("max_score") >= s_tilde)
-        return (
-            term_postings(final_blocks, term, self.num_buckets)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
 
     def msearch(
         self, queries: dict[str, str], top_k: int = 10,
@@ -653,11 +554,13 @@ class SearchEngine:
 
     def plan_info(self, query: str, top_k: int = 10) -> dict:
         """Routing + physical-plan introspection without executing the
-        query: which strategy search() picks (block-max / sharded WAND /
-        join...), the leaf terms, maintenance state, and Spark's
-        formatted physical plan for the resulting frame. The full query
-        never runs; the fast paths do run their driver metadata phases
-        (block-bound collects) while planning."""
+        query: which strategy search() picks (single-term / sharded
+        WAND / sharded tree / join...), the leaf terms, maintenance
+        state, and Spark's formatted physical plan for the resulting
+        frame. The query never runs. The only Spark work routing can
+        submit is the WAND-AND guard's df lookup (>= 1M postings, first
+        sight of a term) and, on a maintained index, the first
+        tombstone / update counts."""
         df = self.search(query, top_k)
         return {
             "strategy": self.last_strategy,

@@ -1,11 +1,17 @@
-"""Partition-parallel block-max WAND top-k (north star: "query-time
-BM25 top-k answered by a partition-parallel block-max WAND traversal —
-posting-list intersect, skip pointers, bounded heap").
+"""Exchange-free per-shard top-k kernels for every term-only query
+(north star: "query-time BM25 top-k answered by a partition-parallel
+block-max WAND traversal — posting-list intersect, skip pointers,
+bounded heap").
 
-Generalizes the engine's single-term block-max path (engine.py
-``_topk_single_term``) to multi-term OR-sum scoring (the reference's
-flat scored search: per-doc total = Σ per-term BM25, ``merge_postings``
-``sea/posting_list.pyx:15``).
+Three kernels share ONE plumbing path (``_sharded_topk``):
+
+* ``shard_wand_topk`` — block-max WAND over the OR-sum (the reference's
+  flat scored search: per-doc total = Σ per-term BM25, ``merge_postings``
+  ``sea/posting_list.pyx:15``); a single term is its one-term case;
+* ``shard_and_topk`` — the intersection, skipping blocks on doc ranges;
+* ``shard_tree_topk`` — any other term-only boolean tree: the compiler's
+  lazy-NOT algebra (``plans/compiler.py``, ``sea/engine.pyx:424-498``)
+  as numpy set algebra over the shard's decoded postings.
 
 Shape:
 
@@ -17,9 +23,9 @@ Shape:
    block lies in exactly ONE doc-range shard (``first_doc // span``)
    — every doc's postings land in exactly one shard, so shard-local
    top-ks are globally mergeable, and no block is replicated;
-3. ``applyInPandas`` per shard runs the numpy WAND kernel below, with
-   no per-query exchange (the cached frame is already partitioned by
-   shard);
+3. ``applyInPandas`` per shard runs the kernel, with no per-query
+   exchange (the cached frame is already partitioned by shard) — one
+   Spark job per query;
 4. ``orderBy(score desc, doc_id asc).limit(k)`` merges shard-local
    top-ks (TakeOrderedAndProject — only ≤ k rows per shard move).
 
@@ -27,7 +33,9 @@ NEGATIVE SCORES: the reference's idf has no floor (``ln((N-df+.5)/
 (df+.5))`` goes negative for df > N/2, ``sea/indexer.pyx:344``), so an
 undecoded block can LOWER a doc's total — classic WAND's "skipping can
 only forfeit gains" assumption fails. Blocks therefore carry BOTH
-``max_score`` and ``min_score``, and the kernel uses two-sided bounds:
+``max_score`` and ``min_score``, and the WAND kernel uses two-sided
+bounds (the AND and tree kernels skip on doc ranges or not at all, so
+they need none):
 
 * per-term shard gains  G_t = max(max over block maxes, 0)
 * per-term shard losses L_t = min(min over block mins, 0)
@@ -57,8 +65,27 @@ from cs_search_engine_architecture_spark.operators.compression import (
     decode_scores,
     varint_decode,
 )
+from cs_search_engine_architecture_spark.operators.msearch import leaf_terms
 
 RESULT_SCHEMA = "doc_id long, score double"
+
+
+def _decode_block(
+    doc_ids_bin: bytes, scores_bin: bytes, lo: int, hi: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """One block's (doc ids, float64 scores) inside the shard [lo, hi)."""
+    ids = np.cumsum(varint_decode(doc_ids_bin), dtype=np.uint64).astype(
+        np.int64
+    )
+    sc = decode_scores(scores_bin).astype(np.float64)
+    m = (ids >= lo) & (ids < hi)
+    return ids[m], sc[m]
+
+
+def _empty_topk() -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": [], "score": []}).astype(
+        {"doc_id": "int64", "score": "float64"}
+    )
 
 
 def shard_wand_topk(
@@ -92,14 +119,10 @@ def shard_wand_topk(
     sc_acc: list[np.ndarray] = []
 
     def decode_into(i: int) -> None:
-        ids = np.cumsum(varint_decode(docs_bin[i]), dtype=np.uint64).astype(
-            np.int64
-        )
-        sc = decode_scores(scores_bin[i]).astype(np.float64)
-        mask = (ids >= lo) & (ids < hi)
-        if mask.any():
-            ids_acc.append(ids[mask])
-            sc_acc.append(sc[mask])
+        ids, sc = _decode_block(docs_bin[i], scores_bin[i], lo, hi)
+        if ids.size:
+            ids_acc.append(ids)
+            sc_acc.append(sc)
         decoded[i] = True
 
     def totals() -> tuple[np.ndarray, np.ndarray]:
@@ -156,9 +179,7 @@ def shard_wand_topk(
     # phase 2: candidate selection by upper bound
     u, t = totals()
     if len(u) == 0:
-        return pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
+        return _empty_topk()
     if np.isfinite(th):
         upper = t + coverage(u, G_t)
         cands = u[upper >= th]
@@ -191,9 +212,7 @@ def shard_and_topk(
     NO block of some other term t' cannot contain an intersection doc
     (blocks are doc-contiguous), so it is dropped from the decode set on
     metadata alone — sparse co-occurrence skips most of both lists."""
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
+    empty = _empty_topk()
     tcol = pdf["term"].to_numpy()
     present = set(tcol.tolist())
     if present != set(terms):
@@ -236,14 +255,10 @@ def shard_and_topk(
             alive &= overlaps_some(t2, f, l)
         ids_parts, sc_parts = [], []
         for i in idxs[alive]:
-            ids = np.cumsum(
-                varint_decode(docs_bin[i]), dtype=np.uint64
-            ).astype(np.int64)
-            sc = decode_scores(scores_bin[i]).astype(np.float64)
-            m = (ids >= lo) & (ids < hi)
-            if m.any():
-                ids_parts.append(ids[m])
-                sc_parts.append(sc[m])
+            ids, sc = _decode_block(docs_bin[i], scores_bin[i], lo, hi)
+            if ids.size:
+                ids_parts.append(ids)
+                sc_parts.append(sc)
         if not ids_parts:
             return empty
         ids = np.concatenate(ids_parts)
@@ -265,11 +280,90 @@ def shard_and_topk(
     return pd.DataFrame({"doc_id": inter[sel], "score": total[sel]})
 
 
+def shard_tree_topk(
+    pdf: pd.DataFrame, ast: dict, k: int, lo: int, hi: int
+) -> pd.DataFrame:
+    """Exact top-k of a term-only boolean tree in one doc shard [lo, hi).
+
+    The compiler's lazy-NOT algebra (``plans/compiler.py``) in numpy:
+    each subtree evaluates to (doc-sorted ids, scores, is_not) and the
+    parent picks the same case of the same 8-case table, with the same
+    float64 arithmetic as the compiled joins — inner: ``intersect1d``,
+    ``left + right``; union: zero-filled ``left + right`` (==
+    ``coalesce(l, 0) + coalesce(r, 0)``); anti: ``isin``, the survivor's
+    score untouched. Scores are therefore bit-identical to the compiled
+    plan, and a repeated term counts once per occurrence exactly as
+    there. Each leaf term's blocks decode once; the root NOT flag is
+    discarded. The algebra is doc-pointwise, so shard-local results
+    merge into the global answer."""
+    tcol = pdf["term"].to_numpy()
+    docs_bin = pdf["doc_ids_bin"].to_numpy()
+    scores_bin = pdf["scores_bin"].to_numpy()
+    absent = (np.empty(0, np.int64), np.empty(0, np.float64))
+    postings: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+    for term in set(tcol.tolist()):
+        parts = [
+            _decode_block(docs_bin[i], scores_bin[i], lo, hi)
+            for i in np.flatnonzero(tcol == term)
+        ]
+        ids = np.concatenate([p[0] for p in parts])
+        sc = np.concatenate([p[1] for p in parts])
+        o = np.argsort(ids, kind="stable")
+        postings[term] = (ids[o], sc[o])
+
+    def inner(li, ls, ri, rs):
+        ids, a, b = np.intersect1d(
+            li, ri, assume_unique=True, return_indices=True
+        )
+        return ids, ls[a] + rs[b]
+
+    def union(li, ls, ri, rs):
+        ids = np.union1d(li, ri)
+        left = np.zeros(len(ids))
+        left[np.searchsorted(ids, li)] = ls
+        right = np.zeros(len(ids))
+        right[np.searchsorted(ids, ri)] = rs
+        return ids, left + right
+
+    def anti(ai, a_sc, bi):
+        keep = ~np.isin(ai, bi, assume_unique=True)
+        return ai[keep], a_sc[keep]
+
+    def ev(node) -> tuple[np.ndarray, np.ndarray, bool]:
+        if node["type"] == "token":
+            return (*postings.get(node["value"], absent), False)
+        if node["operator"] == "not":
+            ids, sc, neg = ev(node["right"])
+            return ids, sc, not neg
+        li, ls, ln = ev(node["left"])
+        ri, rs, rn = ev(node["right"])
+        if node["operator"] == "and":
+            if not ln and not rn:
+                return (*inner(li, ls, ri, rs), False)
+            if ln and not rn:
+                return (*anti(ri, rs, li), False)
+            if not ln and rn:
+                return (*anti(li, ls, ri), False)
+            return (*union(li, ls, ri, rs), True)
+        # "or"
+        if not ln and not rn:
+            return (*union(li, ls, ri, rs), False)
+        if ln and not rn:
+            return (*anti(li, ls, ri), True)
+        if not ln and rn:
+            return (*anti(ri, rs, li), True)
+        return (*inner(li, ls, ri, rs), True)
+
+    ids, sc, _ = ev(ast)
+    sel = np.lexsort((ids, -sc))[:k]
+    return pd.DataFrame({"doc_id": ids[sel], "score": sc[sel]})
+
+
 # ------------------------------------------------------ serving layout
 #
 # Every index is shard-aligned (blocks never cross a ``wand_shard_span``
 # boundary), so the engine keeps ONE cached copy of the blocks
-# repartitioned by ``shard`` (one exchange at first use). Every WAND
+# repartitioned by ``shard`` (one exchange at first use). Every kernel
 # query then runs filter -> sort -> kernel over the cached
 # partitioning — NO per-query ShuffleExchange, so a hot term's
 # compressed payload never re-ships per query.
@@ -287,30 +381,59 @@ def preshard_blocks(
     ).repartition(num_partitions, "shard")
 
 
+def _sharded_topk(
+    sharded: DataFrame, terms: list[str], cols: list[str], kernel, k: int,
+    shard_span: int,
+) -> DataFrame:
+    """The one plumbing path of every kernel: the query terms' block
+    rows (``term``, ``cols``, payloads) from the pre-sharded frame,
+    ``kernel(pdf, lo, hi)`` per shard, then a TakeOrderedAndProject
+    merge of the shard-local top-ks. Exchange-free: the persisted
+    HashPartitioning(shard) satisfies the kernel's
+    ClusteredDistribution, so the plan is InMemoryTableScan -> Filter
+    -> Sort -> FlatMapGroupsInPandas -> TakeOrderedAndProject."""
+    sel = sharded.where(F.col("term").isin(list(terms))).select(
+        "term", *cols, "doc_ids_bin", "scores_bin", "shard"
+    )
+
+    def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = int(pdf["shard"].iloc[0])
+        return kernel(pdf, shard * shard_span, (shard + 1) * shard_span)
+
+    local = sel.groupBy("shard").applyInPandas(per_shard, RESULT_SCHEMA)
+    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
 def wand_topk(
     sharded: DataFrame, kind: str, terms: list[str], k: int, shard_span: int
 ) -> DataFrame:
     """Exact top-k over a pre-sharded cached blocks frame: ``kind``
-    "or" ranks the OR-sum (``shard_wand_topk``), "and" the
-    intersection (``shard_and_topk``). Exchange-free: the persisted
-    HashPartitioning(shard) satisfies the kernel's
-    ClusteredDistribution, so the plan is InMemoryTableScan -> Filter
-    -> Sort -> FlatMapGroupsInPandas, then a TakeOrderedAndProject
-    merge of the shard-local top-ks."""
+    "or" ranks the OR-sum (``shard_wand_topk``; one term is the
+    single-term case), "and" the intersection (``shard_and_topk``)."""
     terms = list(terms)
-    # the AND kernel skips on doc ranges alone — no score bounds needed
-    bounds = ["count", "max_score", "min_score"] if kind == "or" else []
-    sel = sharded.where(F.col("term").isin(terms)).select(
-        "term", "first_doc", "last_doc", *bounds, "doc_ids_bin",
-        "scores_bin", "shard",
-    )
+    if kind == "or":
+        cols = ["first_doc", "last_doc", "count", "max_score", "min_score"]
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        lo, hi = shard * shard_span, (shard + 1) * shard_span
-        if kind == "or":
+        def kernel(pdf, lo, hi):
             return shard_wand_topk(pdf, k, lo=lo, hi=hi)
-        return shard_and_topk(pdf, terms, k, lo=lo, hi=hi)
+    else:
+        # the AND kernel skips on doc ranges alone — no score bounds
+        cols = ["first_doc", "last_doc"]
 
-    local = sel.groupBy("shard").applyInPandas(kernel, RESULT_SCHEMA)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        def kernel(pdf, lo, hi):
+            return shard_and_topk(pdf, terms, k, lo=lo, hi=hi)
+
+    return _sharded_topk(sharded, terms, cols, kernel, k, shard_span)
+
+
+def tree_topk(
+    sharded: DataFrame, ast: dict, k: int, shard_span: int
+) -> DataFrame:
+    """Exact top-k of a term-only boolean tree (``shard_tree_topk``)
+    over a pre-sharded cached blocks frame — scores bit-identical to
+    the compiled plan of ``ast``."""
+
+    def kernel(pdf, lo, hi):
+        return shard_tree_topk(pdf, ast, k, lo=lo, hi=hi)
+
+    return _sharded_topk(sharded, leaf_terms(ast), [], kernel, k, shard_span)

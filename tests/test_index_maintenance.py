@@ -268,12 +268,20 @@ def test_plan_info_reports_routing(spark, tmp_path):
         spark, corpus, out, fields=["text"], analyzer="simple", num_buckets=4
     )
     eng = SearchEngine(spark, out, cache=False)
-    one = eng.plan_info("spark")
+    # introspection runs nothing: no Spark job is submitted while the
+    # single-term and tree routes plan on a clean index
+    sc = spark.sparkContext
+    sc.setJobGroup("plan_info_probe", "plan_info must not submit jobs")
+    try:
+        one = eng.plan_info("spark")
+        many = eng.plan_info("spark or join")
+        assert sc.statusTracker().getJobIdsForGroup("plan_info_probe") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert one["strategy"] == "single_term_blockmax"
     assert one["terms"] == ["spark"]
     assert "TakeOrderedAndProject" in one["physical_plan"] or "Sort" in one["physical_plan"]
-    many = eng.plan_info("spark or join")
-    assert many["strategy"] == "join"  # < 1M postings: join path
+    assert many["strategy"] == "tree_sharded"  # < 1M postings: tree kernel
     assert many["tombstones"] == 0 and many["delta_segments"] == 0
     indexer.delete_docs(spark, out, [0])
     eng2 = SearchEngine(spark, out, cache=False)
@@ -402,7 +410,7 @@ def test_update_docs_in_place(spark, tmp_path):
     assert ("b", 0) in got
     assert [d for q, d in got if q == "a"].count(0) == 1
     assert eng.plan_info("spark or join", 5)["strategy"] == (
-        "join_masked_update_arm"
+        "tree_sharded+delta_arm"
     )
     fz = eng.fuzzy_search("qqnewterm", 10)
     assert [r["doc_id"] for r in fz.collect()] == [0] or fz.count() == 0

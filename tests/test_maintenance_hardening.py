@@ -3,8 +3,9 @@ slot allocation can never overwrite an existing segment, compaction
 carries the full block-layout config, resumable builds refuse a
 num_slices mismatch and survive empty corpora, the doc-id domain and
 the WAND shard span are validated with a clear error, a legacy meta
-without a span serves through the join, and add_docs' duplicate check
-sees zero-posting docs."""
+without a span serves through the join, add_docs' duplicate check
+sees zero-posting docs, and a new engine never reads an older one's
+cache of replaced files."""
 
 from __future__ import annotations
 
@@ -221,6 +222,50 @@ def test_resumable_build_empty_corpus(spark, tmp_path):
     assert meta["num_documents"] == 0
     eng = SearchEngine(spark, out, cache=False)
     assert eng.search("anything", 5).collect() == []
+
+
+def test_legacy_meta_single_term_routes_to_join(spark, tmp_path):
+    """The span check comes before the single-term route: one term on
+    a meta without ``wand_shard_span`` serves through the compiled join
+    plan, never the sharded kernel, with the compiled result."""
+    from cs_search_engine_architecture_spark.plans.query_parser import (
+        parse_query,
+    )
+
+    docs = [(0, "alpha beta"), (1, "alpha gamma"), (2, "beta delta"),
+            (3, "alpha alpha delta")]
+    out = _build(spark, tmp_path, docs=docs)
+    eng = SearchEngine(spark, out, cache=False)
+    del eng.meta["wand_shard_span"]
+    got = [
+        (r["doc_id"], r["score"]) for r in eng.search("alpha", 10).collect()
+    ]
+    assert eng.last_strategy == "join"
+    want = [
+        (r["doc_id"], r["score"])
+        for r in eng._scored(parse_query("alpha", analyzer="simple"))
+        .orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
+    ]
+    assert got == want and len(got) == 3
+
+
+def test_new_engine_never_serves_a_replaced_index_from_cache(spark, tmp_path):
+    """Spark keys cached data by plan, and a parquet scan's plan by its
+    root paths: an engine opened on a path that ``compact_in_place``
+    rewrote must not be served the files an older engine persisted —
+    neither the blocks cache nor the pre-sharded kernel frame."""
+    out = _build(spark, tmp_path)
+    old = SearchEngine(spark, out)  # persists blocks (cache=True)
+    for q in ("join", "hash or join"):
+        assert 1 in {r["doc_id"] for r in old.search(q, 10).collect()}
+    assert old.search_df("join").count() == 3
+    indexer.delete_docs(spark, out, [1])
+    indexer.compact_in_place(spark, out)
+    new = SearchEngine(spark, out)
+    for q in ("join", "hash or join"):
+        got = {r["doc_id"] for r in new.search(q, 10).collect()}
+        assert got and 1 not in got, (q, new.last_strategy)
+    assert {r["doc_id"] for r in new.search_df("join").collect()} == {2, 3}
 
 
 def test_add_docs_duplicate_check_sees_zero_posting_docs(spark, tmp_path):

@@ -211,7 +211,7 @@ def test_random_update_sequences_match_rebuild(spark, tmp_path):
             d for d, t in current.items() if term in t.split()
         )
         assert got == want, f"term {term}: {got} != {want}"
-        # fast path (single-term block-max + arm) agrees with the
+        # fast path (single-term kernel + delta arm) agrees with the
         # compiled join path under pending updates
         fast = [
             (r["doc_id"], round(r["score"], 9))

@@ -94,13 +94,33 @@ def test_wand_shard_span_invariance(engine, span):
     assert _wand_topk(engine, terms, 25, span=span) == want
 
 
-def test_wand_single_term_matches_blockmax(engine):
-    got = _wand_topk(engine, ["index"], 15)
-    want = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in engine._topk_single_term("index", 15).collect()
+def test_wand_single_term_matches_blockmax(spark, engine):
+    """One term through the WAND kernel — the single_term_blockmax
+    route — equals the oracle's full-list sort (ids and float32 scores
+    exact), called directly and through the router."""
+    import numpy as np
+
+    from cs_search_engine_architecture_spark.oracle.reference import (
+        OracleIndex,
+    )
+
+    corpus = synth_source_files(spark, 4000, parallelism=8)
+    oracle = OracleIndex(
+        [(r["doc_id"], [r["path"], r["content"]])
+         for r in corpus.select("doc_id", "path", "content").collect()]
+    )
+    want = oracle.search("index", 15)
+    assert len(want) == 15
+    span = engine.meta["wand_shard_span"]
+    got = [
+        (r["doc_id"], float(np.float32(r["score"])))
+        for r in wand.wand_topk(
+            engine._wand_sharded(), "or", ["index"], 15, span
+        ).collect()
     ]
     assert got == want
+    assert engine.search_collect("index", 15) == want
+    assert engine.last_strategy == "single_term_blockmax"
 
 
 def test_wand_k_exceeds_matches(engine):
@@ -217,3 +237,149 @@ def test_wand_and_range_skip_actually_skips(spark, engine):
     join = dict(_and_join_topk(engine, [rare, hot], 100))
     got = {int(r.doc_id): round(float(r.score), 9) for r in out.itertuples()}
     assert got == {d: round(s, 9) for d, s in join.items()}
+
+
+# ------------------------------------------ tree kernel (tree_sharded)
+#
+# The split layout: 16-doc shards, 3-posting blocks, salting from df 4
+# in 8-doc groups — every term spreads over many blocks and shards.
+# Shard 4 (docs 64-79) holds "beta" and no other query term, so a
+# negated "beta" is the only thing the kernel sees there.
+
+TREE_DOCS = [
+    (
+        i,
+        "beta pad" if 64 <= i < 80 else " ".join(
+            w
+            for w, on in (
+                ("alpha", i % 2 == 0), ("alpha", i % 4 == 0),
+                ("beta", i % 3 == 0), ("gamma", i % 5 in (0, 1)),
+                ("delta", i % 7 == 0), ("pad", i % 4 == 1),
+            )
+            if on
+        ) or "pad",
+    )
+    for i in range(96)
+]
+
+TREE_QUERIES = [
+    "alpha and beta",  # AND(+,+)
+    "alpha and not beta",  # AND(+,-)
+    "not alpha and beta",  # AND(-,+)
+    "not alpha and not beta",  # AND(-,-): flagged union
+    "alpha or beta",  # OR(+,+)
+    "not alpha or beta",  # OR(-,+)
+    "alpha or not beta",  # OR(+,-)
+    "(not alpha) or (not beta)",  # OR(-,-): flagged intersection
+    "not (alpha or gamma)",  # top-level NOT
+    "alpha or alpha",
+    "alpha and alpha",
+    "alpha and zzabsent",
+    "alpha or zzabsent",
+    "not zzabsent and beta",
+    "(alpha or beta) and not (gamma and delta)",
+    "alpha and (beta or not gamma)",
+    "(alpha and beta) or (gamma and not delta)",
+]
+
+
+def _tree_build(spark, tmp_path):
+    out = str(tmp_path / "tree_idx")
+    corpus = spark.createDataFrame(TREE_DOCS, "doc_id long, text string")
+    src = str(tmp_path / "tree_corpus.parquet")
+    corpus.write.parquet(src)
+    build_index(
+        spark, corpus, out, fields=["text"], analyzer="simple",
+        num_buckets=4, block_size=3, hot_df=4, group_span=8,
+        shard_span=16, corpus_path=src,
+    )
+    return out
+
+
+def _assert_tree_equals_compiled(engine, strategy, ks=(5, 1000)):
+    """Every TREE_QUERIES top-k through the router equals the cut of the
+    compiled ``_scored(ast)`` ranking (score desc, doc_id asc): ids
+    exact, float64 scores exact. k=1000 is above every match count.
+    Returns how many routed answers were non-empty."""
+    from cs_search_engine_architecture_spark.plans.query_parser import (
+        parse_query,
+    )
+
+    nonempty = 0
+    for q in TREE_QUERIES:
+        full = sorted(
+            ((r["doc_id"], r["score"]) for r in engine._scored(
+                parse_query(q, analyzer="simple")
+            ).collect()),
+            key=lambda t: (-t[1], t[0]),
+        )
+        for k in ks:
+            got = [
+                (r["doc_id"], r["score"])
+                for r in engine.search(q, k).collect()
+            ]
+            assert engine.last_strategy == strategy, (q, engine.last_strategy)
+            assert got == full[:k], (q, k)
+            nonempty += bool(got)
+    return nonempty
+
+
+def test_tree_kernel_equals_compiled_with_maintenance(spark, tmp_path):
+    """The tree_sharded route is bit-identical to the compiled plan on
+    all 8 lazy-NOT cases, top-level NOT, duplicate leaves, absent terms
+    and a shard holding only the negated term — on a clean index and
+    after delete_docs, update_docs and add_docs (base kernel, mask,
+    delta arm)."""
+    from cs_search_engine_architecture_spark.operators import indexer
+
+    out = _tree_build(spark, tmp_path)
+    eng = SearchEngine(spark, out, cache=False)
+    assert _assert_tree_equals_compiled(eng, "tree_sharded") >= 24
+
+    # deletes in four of the six shards, the beta-only one included
+    indexer.delete_docs(spark, out, [0, 6, 30, 66, 90])
+    eng = SearchEngine(spark, out, cache=False)
+    _assert_tree_equals_compiled(eng, "tree_sharded", ks=(3,))
+
+    schema = "doc_id long, text string"
+    indexer.update_docs(spark, out, spark.createDataFrame(
+        [(3, "gamma delta alpha"), (70, "alpha alpha alpha")], schema
+    ))
+    eng = SearchEngine(spark, out, cache=False)
+    _assert_tree_equals_compiled(eng, "tree_sharded+delta_arm", ks=(3,))
+
+    indexer.add_docs(spark, out, spark.createDataFrame(
+        [(200, "alpha beta"), (201, "beta gamma delta"), (202, "alpha")],
+        schema,
+    ))
+    eng = SearchEngine(spark, out, cache=False)
+    _assert_tree_equals_compiled(eng, "tree_sharded+delta_arm", ks=(3,))
+
+
+@pytest.mark.parametrize("kernel", ["or", "and", "tree"])
+def test_shard_kernels_empty_frame(kernel):
+    """Edge contract: every per-shard kernel maps an empty block frame
+    to an empty ``doc_id long, score double`` frame."""
+    import pandas as pd
+
+    pdf = pd.DataFrame({
+        "term": pd.Series([], dtype=object),
+        "first_doc": pd.Series([], dtype="int64"),
+        "last_doc": pd.Series([], dtype="int64"),
+        "count": pd.Series([], dtype="int32"),
+        "max_score": pd.Series([], dtype="float32"),
+        "min_score": pd.Series([], dtype="float32"),
+        "doc_ids_bin": pd.Series([], dtype=object),
+        "scores_bin": pd.Series([], dtype=object),
+    })
+    ast = {"type": "operator", "operator": "and",
+           "left": {"type": "token", "value": "a"},
+           "right": {"type": "token", "value": "b"}}
+    out = {
+        "or": lambda: wand.shard_wand_topk(pdf, 10, lo=0, hi=16),
+        "and": lambda: wand.shard_and_topk(pdf, ["a", "b"], 10, lo=0, hi=16),
+        "tree": lambda: wand.shard_tree_topk(pdf, ast, 10, lo=0, hi=16),
+    }[kernel]()
+    assert out.empty
+    assert list(out.columns) == ["doc_id", "score"]
+    assert [str(t) for t in out.dtypes] == ["int64", "float64"]

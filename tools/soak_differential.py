@@ -22,9 +22,10 @@ through four legs per query:
 4. ``engine.percolate``          (presence algebra; skipped for
                                   phrase-inside-tree queries, which the
                                   operator correctly refuses)
-5. ``engine.search``             (the PRODUCTION router: block-max
-                                  single-term, sharded WAND, batched
-                                  AND/OR, compiled fallback — whatever
+5. ``engine.search``             (the PRODUCTION router: sharded
+                                  WAND for single terms and flat
+                                  OR/AND, the sharded tree kernel,
+                                  compiled fallback — whatever
                                   strategy it picks must return the
                                   compiled plan's exact top-k; the
                                   strategy histogram is printed so a
